@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Focused micro-bench: run one (or a comma-list of) declared key(s)
   * REPS times in a warm JVM, print per-rep seconds. For plan iteration
@@ -31,17 +30,11 @@ import org.apache.spark.sql.SparkSession
 object BenchOne {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val keys = sys.env.getOrElse("SPARK_GRAFT_KEY", "llm_dedup_minhash_lsh")
       .split(",").toSeq
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
     val nMix = sys.env.getOrElse("SPARK_GRAFT_MIX", "0").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session()
     spark.sparkContext.setLogLevel("ERROR")
     try {
       spark.read.parquet(s"$sfDir/lineitem.parquet")

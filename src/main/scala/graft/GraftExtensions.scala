@@ -1,52 +1,19 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.{CosineSimilarity, NGramsGenerator, SortedIntersectSize}
 
-/** Session-extension entry point: makes the graft custom expressions
-  * available to ANY session (including pure-SQL users) via
+/** Session-extension entry point: makes the [[Graft]] table of custom
+  * expressions and plan extensions available to ANY session (including
+  * pure-SQL users) via
   *
   *   spark.sql.extensions=graft.GraftExtensions
   *
-  * — the supported public mechanism for shipping engine extensions
-  * (`SparkSessionExtensions.injectFunction`). The `queries` map does
-  * not depend on this (it registers per-session on demand); this class
-  * is the library-user surface.
+  * — the supported public mechanism for shipping engine extensions.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName,
-                         "graft_cosine_sim"),
-      (children: Seq[Expression]) =>
-        CosineSimilarity(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_sorted_intersect_size"),
-      new ExpressionInfo(classOf[SortedIntersectSize].getName,
-                         "graft_sorted_intersect_size"),
-      (children: Seq[Expression]) =>
-        SortedIntersectSize(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_ngrams"),
-      new ExpressionInfo(classOf[NGramsGenerator].getName, "graft_ngrams"),
-      (children: Seq[Expression]) => {
-        val n = children(1) match {
-          case org.apache.spark.sql.catalyst.expressions
-                 .Literal(v: Int, org.apache.spark.sql.types.IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"graft_ngrams(arr, n): n must be an integer literal, got $other")
-        }
-        NGramsGenerator(children(0), n)
-      }))
-    // Performance rule: derive the integer length-prune ahead of any
-    // merge-walk similarity threshold in a join condition.
-    ext.injectOptimizerRule(_ => graft.plans.IntersectLengthPrune)
-    // Whole-operator extension: plans TopKPerGroupNode as the
-    // two-phase bounded-heap operator (see plans/TopKPerGroup.scala).
-    ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
+    Graft.functions.foreach(ext.injectFunction)
+    Graft.optimizerRules.foreach(r => ext.injectOptimizerRule(_ => r))
+    Graft.strategies.foreach(s => ext.injectPlannerStrategy(_ => s))
   }
 }

@@ -7,94 +7,57 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `graft.ops`; this object is the single registry the driver reads.
   */
 object SparkEntry {
+  type Query = (SparkSession, String) => DataFrame
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("insta_engagement_by_user")(spark, "/root/testdata/sf0.001")
 
+  /** Every module of declared keys, each named once. */
+  private def modules: Seq[ops.Module] = {
+    import ops._
+    Seq(Relational, Windows, Scalars, Streaming, Social, LlmPipeline, LlmScale, Sinks,
+      Pipelines2, Pipelines3, Pipelines4, Pipelines5, Pipelines6, Pipelines7, Pipelines8,
+      Pipelines9, Pipelines10, Pipelines11, Pipelines12, Pipelines13, Pipelines14,
+      Pipelines15, Pipelines16, Pipelines17, Pipelines18, Pipelines19, Pipelines20,
+      Pipelines21, Pipelines22, Pipelines23, Pipelines24, Pipelines25, Pipelines26,
+      Pipelines27, Pipelines28, Pipelines29, Pipelines30, Pipelines31, Pipelines32, Tpch)
+  }
+
+  /** The queries and oracles of `modules`, merged. A key declared by
+    * two modules, or an oracle without a query, is an error. Each query
+    * installs [[Graft]] into its session before it builds. */
+  private[graft] def registry(modules: Seq[ops.Module])
+      : (Map[String, Query], Map[String, String]) = {
+    def merge[V](part: ops.Module => Map[String, V]): Map[String, V] = {
+      val owner = collection.mutable.Map.empty[String, ops.Module]
+      modules.flatMap { m =>
+        part(m).map { case (k, v) =>
+          owner.put(k, m).foreach { o =>
+            throw new IllegalStateException(s"query key '$k' is declared by both " +
+              s"${o.getClass.getSimpleName.stripSuffix("$")} and " +
+              s"${m.getClass.getSimpleName.stripSuffix("$")}")
+          }
+          k -> v
+        }
+      }.toMap
+    }
+    val qs = merge(_.queries)
+    val os = merge(_.oracles)
+    val orphans = os.keySet -- qs.keySet
+    require(orphans.isEmpty, s"oracles without queries: ${orphans.toSeq.sorted.mkString(", ")}")
+    val installed: Map[String, Query] = qs.map { case (k, q) =>
+      k -> ((s: SparkSession, d: String) => { Graft.install(s); q(s, d) })
+    }
+    (installed, os)
+  }
+
+  private lazy val built = registry(modules)
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
-    ops.Relational.queries ++
-    ops.Windows.queries ++
-    ops.Scalars.queries ++
-    ops.Streaming.queries ++
-    ops.Social.queries ++
-    ops.LlmPipeline.queries ++
-    ops.LlmScale.queries ++
-    ops.Sinks.queries ++
-    ops.Pipelines2.queries ++
-    ops.Pipelines3.queries ++
-    ops.Pipelines4.queries ++
-    ops.Pipelines5.queries ++
-    ops.Pipelines6.queries ++
-    ops.Pipelines7.queries ++
-    ops.Pipelines8.queries ++
-    ops.Pipelines9.queries ++
-    ops.Pipelines10.queries ++
-    ops.Pipelines11.queries ++
-    ops.Pipelines12.queries ++
-    ops.Pipelines13.queries ++
-    ops.Pipelines14.queries ++
-    ops.Pipelines15.queries ++
-    ops.Pipelines16.queries ++
-    ops.Pipelines17.queries ++
-    ops.Pipelines18.queries ++
-    ops.Pipelines19.queries ++
-    ops.Pipelines20.queries ++
-    ops.Pipelines21.queries ++
-    ops.Pipelines22.queries ++
-    ops.Pipelines23.queries ++
-    ops.Pipelines24.queries ++
-    ops.Pipelines25.queries ++
-    ops.Pipelines26.queries ++
-    ops.Pipelines27.queries ++
-    ops.Pipelines28.queries ++
-    ops.Pipelines29.queries ++
-    ops.Pipelines30.queries ++
-    ops.Pipelines31.queries ++
-    ops.Pipelines32.queries ++
-    ops.Tpch.queries
+  lazy val queries: Map[String, Query] = built._1
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  lazy val oracleSql: Map[String, String] =
-    ops.Relational.oracles ++
-    ops.Windows.oracles ++
-    ops.Scalars.oracles ++
-    ops.Streaming.oracles ++
-    ops.Social.oracles ++
-    ops.LlmPipeline.oracles ++
-    ops.LlmScale.oracles ++
-    ops.Sinks.oracles ++
-    ops.Pipelines2.oracles ++
-    ops.Pipelines3.oracles ++
-    ops.Pipelines4.oracles ++
-    ops.Pipelines5.oracles ++
-    ops.Pipelines6.oracles ++
-    ops.Pipelines7.oracles ++
-    ops.Pipelines8.oracles ++
-    ops.Pipelines9.oracles ++
-    ops.Pipelines10.oracles ++
-    ops.Pipelines11.oracles ++
-    ops.Pipelines12.oracles ++
-    ops.Pipelines13.oracles ++
-    ops.Pipelines14.oracles ++
-    ops.Pipelines15.oracles ++
-    ops.Pipelines16.oracles ++
-    ops.Pipelines17.oracles ++
-    ops.Pipelines18.oracles ++
-    ops.Pipelines19.oracles ++
-    ops.Pipelines20.oracles ++
-    ops.Pipelines21.oracles ++
-    ops.Pipelines22.oracles ++
-    ops.Pipelines23.oracles ++
-    ops.Pipelines24.oracles ++
-    ops.Pipelines25.oracles ++
-    ops.Pipelines26.oracles ++
-    ops.Pipelines27.oracles ++
-    ops.Pipelines28.oracles ++
-    ops.Pipelines29.oracles ++
-    ops.Pipelines30.oracles ++
-    ops.Pipelines31.oracles ++
-    ops.Pipelines32.oracles ++
-    ops.Tpch.oracles
+  lazy val oracleSql: Map[String, String] = built._2
 }

@@ -81,27 +81,8 @@ case class CosineSimilarity(left: Expression, right: Expression)
 }
 
 object CosineSimilarity {
-  /** Register as a SQL function on the session (idempotent), so call
-    * sites can use `expr("graft_cosine_sim(a, b)")`. Spark 4's Column
-    * no longer exposes `.expr`, so the function-registry route is the
-    * public way to lift a custom Expression into the DSL. */
-  def register(spark: SparkSession): Unit = {
-    // Skip when already present: createOrReplaceTempFunction logs a
-    // WARN per replacement, which pollutes the bench's stdout protocol
-    // when 100+ queries each call register on the shared session.
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_cosine_sim")
-    if (!reg.functionExists(id)) reg.createOrReplaceTempFunction(
-      "graft_cosine_sim",
-      exprs => CosineSimilarity(exprs(0), exprs(1)),
-      "scala_udf")
-    val idOnce =
-      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_cosine_once")
-    if (!reg.functionExists(idOnce)) reg.createOrReplaceTempFunction(
-      "graft_cosine_once",
-      exprs => CosineSimilarityOnce(exprs(0), exprs(1)),
-      "scala_udf")
-  }
+  /** Installs the graft functions (see [[graft.Graft]]) on the session. */
+  def register(spark: SparkSession): Unit = graft.Graft.install(spark)
 }
 
 /** The SAME fused cosine, value-identical to [[CosineSimilarity]] on

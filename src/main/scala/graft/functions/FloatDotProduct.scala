@@ -80,13 +80,6 @@ case class FloatDotProduct(left: Expression, right: Expression)
 }
 
 object FloatDotProduct {
-  /** Register as `graft_dot_f` on the session (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_dot_f")
-    if (!reg.functionExists(id)) reg.createOrReplaceTempFunction(
-      "graft_dot_f",
-      exprs => FloatDotProduct(exprs(0), exprs(1)),
-      "scala_udf")
-  }
+  /** Installs the graft functions (see [[graft.Graft]]) on the session. */
+  def register(spark: SparkSession): Unit = graft.Graft.install(spark)
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -74,16 +73,4 @@ case class LongDotProduct(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): LongDotProduct =
     copy(left = newLeft, right = newRight)
-}
-
-object LongDotProduct {
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id =
-      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_long_dot")
-    if (!reg.functionExists(id)) reg.createOrReplaceTempFunction(
-      "graft_long_dot",
-      exprs => LongDotProduct(exprs(0), exprs(1)),
-      "scala_udf")
-  }
 }

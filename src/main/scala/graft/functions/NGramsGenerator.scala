@@ -59,19 +59,6 @@ case class NGramsGenerator(child: Expression, n: Int)
 }
 
 object NGramsGenerator {
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_ngrams")
-    if (!reg.functionExists(id)) reg.createOrReplaceTempFunction(
-      "graft_ngrams",
-      exprs => {
-        val n = exprs(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"graft_ngrams(arr, n): n must be an integer literal, got $other")
-        }
-        NGramsGenerator(exprs(0), n)
-      },
-      "scala_udf")
-  }
+  /** Installs the graft functions (see [[graft.Graft]]) on the session. */
+  def register(spark: SparkSession): Unit = graft.Graft.install(spark)
 }

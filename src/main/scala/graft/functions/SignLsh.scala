@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.expr
@@ -82,35 +81,8 @@ object SignLsh {
     expr(s"graft_sign_lsh(embedding, ($np))")
   }
 
-  /** Register [[SignLshBucket]] as `graft_sign_lsh` (idempotent) —
-    * same function-registry route as [[CosineSimilarity.register]].
-    * Two or three args: `graft_sign_lsh(embedding, np[, offset])` —
-    * the optional offset (round 15, the two-projection widening)
-    * shifts every plane's GLOBAL index by `offset`, so a second
-    * projection continues the same hyperplane family where the first
-    * stopped instead of re-using its planes. Offset 0 ≡ the 2-arg
-    * form; the slice-of-larger-projection identity
-    * `graft_sign_lsh(e, n, off) = graft_sign_lsh(e, off + n) &
-    * (2^n − 1)` is pinned in Round15Spec.
-    *
-    * Also registers `graft_sign_lsh_margins` ([[SignLshMargins]]) —
-    * the same loop's PRE-SIGN accumulators as an array, the
-    * margin-directed probe set's input (round 15). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier("graft_sign_lsh")
-    if (!reg.functionExists(id)) reg.createOrReplaceTempFunction(
-      "graft_sign_lsh",
-      exprs => SignLshBucket(exprs(0), exprs(1),
-        if (exprs.length > 2) exprs(2) else Literal(0)),
-      "scala_udf")
-    val idm = FunctionIdentifier("graft_sign_lsh_margins")
-    if (!reg.functionExists(idm)) reg.createOrReplaceTempFunction(
-      "graft_sign_lsh_margins",
-      exprs => SignLshMargins(exprs(0), exprs(1),
-        if (exprs.length > 2) exprs(2) else Literal(0)),
-      "scala_udf")
-  }
+  /** Installs the graft functions (see [[graft.Graft]]) on the session. */
+  def register(spark: SparkSession): Unit = graft.Graft.install(spark)
 
   /** DuckDB mirror of [[SignLshMargins]] — element p+1 (1-based) is
     * plane `off + p`'s exact pre-sign BIGINT accumulator. Pure integer

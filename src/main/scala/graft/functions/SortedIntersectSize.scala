@@ -59,21 +59,8 @@ case class SortedIntersectSize(left: Expression, right: Expression)
 }
 
 object SortedIntersectSize {
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    val id =
-      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_sorted_intersect_size")
-    if (!reg.functionExists(id)) reg.createOrReplaceTempFunction(
-      "graft_sorted_intersect_size",
-      exprs => SortedIntersectSize(exprs(0), exprs(1)),
-      "scala_udf")
-    val idOnce =
-      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_sorted_intersect_once")
-    if (!reg.functionExists(idOnce)) reg.createOrReplaceTempFunction(
-      "graft_sorted_intersect_once",
-      exprs => SortedIntersectSizeOnce(exprs(0), exprs(1)),
-      "scala_udf")
-  }
+  /** Installs the graft functions (see [[graft.Graft]]) on the session. */
+  def register(spark: SparkSession): Unit = graft.Graft.install(spark)
 }
 
 /** The SAME merge walk, value-identical to [[SortedIntersectSize]] on

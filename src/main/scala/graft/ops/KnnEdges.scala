@@ -153,7 +153,6 @@ object KnnEdges {
   /** Salted adaptive-cell top-3 edges: `src_id, dst_id, np, cos_sim,
     * rnk` with rnk ≤ 3 (unordered — callers add their ORDER BY). */
   def topkEdges(s: SparkSession, d: String, floor: Int = 5): DataFrame = {
-    graft.functions.CosineSimilarity.register(s)
     // Checkpointed (round 14, ADVICE r13): the refined-cell relation
     // feeds BOTH sides of the salted self-join in edgesOf — without
     // the cut the np+12-plane projection and the depth aggregate
@@ -185,7 +184,6 @@ object KnnEdges {
     * reaches CAP, so the output is the ungated edge set plus zero hub
     * rows. */
   def gatedEdges(s: SparkSession, d: String, floor: Int = 5): DataFrame = {
-    graft.functions.CosineSimilarity.register(s)
     // Checkpointed: effs feeds BOTH the kept-edge branch and the hub
     // branch — without the cut the full projection + depth derivation
     // runs twice (measured ~2.4 s vs the adaptive key's ~1.0 s at

@@ -15,15 +15,13 @@ import org.apache.spark.sql.functions._
   * is blocked: probes × corpus with the probe side broadcast; the LSH
   * scale path lives in `graft.functions.MinHash` (Phase 4).
   */
-object LlmPipeline {
-  type Q = (SparkSession, String) => DataFrame
+object LlmPipeline extends Module {
 
   /** Cosine via the codegen'd custom Expression
     * (graft.functions.CosineSimilarity): one fused loop per row inside
     * whole-stage codegen, arithmetic bit-identical to the sequential
     * double-promoted HOF formulation mirrored by the DuckDB oracles. */
   private def cosine(s: SparkSession, a: String, b: String): Column = {
-    graft.functions.CosineSimilarity.register(s)
     expr(s"graft_cosine_sim($a, $b)")
   }
 
@@ -85,7 +83,6 @@ object LlmPipeline {
       // PropertySpec) into sorted long arrays, so the per-pair work is
       // one allocation-free merge walk (SortedIntersectSize) instead
       // of generic string-array set ops. |A∪B| = |A|+|B|-|A∩B|.
-      graft.functions.SortedIntersectSize.register(s)
       val toks = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"),
                 array_sort(array_distinct(

@@ -19,8 +19,7 @@ import org.apache.spark.sql.functions._
   * keys (hash, band, bucket) — candidate generation never goes
   * quadratic in the corpus; only blocked/bucketed pairs are scored.
   */
-object LlmScale {
-  type Q = (SparkSession, String) => DataFrame
+object LlmScale extends Module {
 
   /** 2^31-1; MinHash modulus. a*h stays < 2^52 (h is 32-bit). */
   private val P = 2147483647L
@@ -37,7 +36,6 @@ object LlmScale {
   /** Codegen'd cosine (graft.functions.CosineSimilarity) — same
     * sequential double arithmetic the oracles mirror. */
   private def cosine(s: SparkSession, a: String, b: String): Column = {
-    graft.functions.CosineSimilarity.register(s)
     expr(s"graft_cosine_sim($a, $b)")
   }
 
@@ -171,7 +169,6 @@ object LlmScale {
       // Verify stage: hashed sorted token arrays + codegen'd merge
       // walk (see llm_dedup_near) — candidates can be millions of
       // pairs on a high-similarity corpus.
-      graft.functions.SortedIntersectSize.register(s)
       val tsets = Tables.documents(s, d)
         .select(col("doc_id"),
                 array_sort(array_distinct(
@@ -246,7 +243,6 @@ object LlmScale {
     // these small-denominator rationals), length prune derived by
     // plans.IntersectLengthPrune, one merge walk per candidate.
     "llm_dedup_ngram" -> ((s, d) => {
-      graft.functions.SortedIntersectSize.register(s)
       // Merge-walk operands: sorted DISTINCT shingle hashes. The
       // distinct runs AFTER the hash so it takes array_distinct's
       // primitive-long fast path instead of the interpreted O(n²)
@@ -360,8 +356,6 @@ object LlmScale {
     // The scale path is llm_dedup_embedding_lsh below — identical
     // scoring, LSH-bucketed candidate generation.
     "llm_dedup_embedding" -> ((s, d) => {
-      graft.functions.FloatDotProduct.register(s)
-      graft.functions.CosineSimilarity.register(s)
       // Round 18 (opt, guide §4.4): the join keeps the vec_id order
       // and the recall-lossless dot screen at 0.3498 (one precomputed
       // norm per row — see llm_dedup_embedding_lsh), and the exact
@@ -423,7 +417,6 @@ object LlmScale {
     // so the gate is a no-op: pair set identical, zero hub rows —
     // with the gate predicate itself mirrored in the oracle.
     "llm_dedup_embedding_lsh" -> ((s, d) => {
-      graft.functions.FloatDotProduct.register(s)
       val nv = Tables.embeddings(s, d)
         .agg(count(lit(1)).as("n_vecs"))
         .select(greatest(lit(3),
@@ -474,7 +467,6 @@ object LlmScale {
       // threshold filtered above it — the r17 form carried the cosine
       // in the condition AND re-projected it (two fused walks per
       // surviving pair). Values and survivor set identical.
-      graft.functions.CosineSimilarity.register(s)
       val pairs = probes.as("a").join(build.as("b"),
           col("a.pbucket") === col("b.bucket") &&
           col("a.salt") === col("b.salt") &&

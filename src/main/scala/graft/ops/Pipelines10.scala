@@ -10,8 +10,7 @@ import org.apache.spark.sql.functions._
   * production "don't re-train on what we already have" gate. SURVEY
   * §2.0 determinism rules apply throughout.
   */
-object Pipelines10 {
-  type Q = (SparkSession, String) => DataFrame
+object Pipelines10 extends Module {
 
   def queries: Map[String, Q] = Map(
     // Association-rule metrics: support, confidence and lift for
@@ -76,7 +75,6 @@ object Pipelines10 {
     // exclude exact dups so the two classes partition the dropped
     // set; kept = docs − exact − near.
     "llm_incremental_dedup" -> ((s, d) => {
-      graft.functions.SortedIntersectSize.register(s)
       val P = 2147483647L
       val A = Seq(100003L, 122251L, 135637L, 161423L, 173431L, 188677L,
                   199831L, 224737L, 350377L, 411637L, 467237L, 524287L,

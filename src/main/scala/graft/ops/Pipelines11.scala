@@ -11,8 +11,7 @@ import org.apache.spark.sql.functions._
   * day-of-week × hour activity matrix. SURVEY §2.0 determinism rules
   * apply throughout.
   */
-object Pipelines11 {
-  type Q = (SparkSession, String) => DataFrame
+object Pipelines11 extends Module {
 
   /** Per-session rows (user_id, session_id, n_events, start_ts) via
     * the same 30-minute gaps-and-islands construction as

@@ -13,8 +13,7 @@ import org.apache.spark.sql.functions._
   * SURVEY §2.0 determinism rules apply throughout: integer-derived
   * doubles, explicit tiebreaks, round+0.0 on every float output.
   */
-object Pipelines12 {
-  type Q = (SparkSession, String) => DataFrame
+object Pipelines12 extends Module {
 
   def queries: Map[String, Q] = Map(
     // Confusion matrix of the n-gram language-ID heuristic against

@@ -14,8 +14,7 @@ import org.apache.spark.sql.functions._
   * count/sum pairs, logs of integer ratios), ties break on explicit
   * id order, floats appear only in final rounded outputs.
   */
-object Pipelines13 {
-  type Q = (SparkSession, String) => DataFrame
+object Pipelines13 extends Module {
 
   def queries: Map[String, Q] = Map(
     // Two Lloyd iterations of k-means over quantized embeddings —
@@ -37,7 +36,6 @@ object Pipelines13 {
     // llm_sim_topk_ivf pattern) so each vector probes nprobe cells
     // instead of all k.
     "llm_embed_kmeans" -> ((s, d) => {
-      graft.functions.LongDotProduct.register(s)
       // Array-form assignment via the codegen'd fused dot:
       // ‖v−c‖² = ‖v‖² − 2·v·c + ‖c‖² — exact integers throughout, and
       // the candidate table is N·k rows (k=10 centroid ARRAYS

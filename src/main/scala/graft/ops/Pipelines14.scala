@@ -13,8 +13,7 @@ import org.apache.spark.sql.functions._
   * float formulas share identical expression shape across engines,
   * every output float is round(...)+0.0.
   */
-object Pipelines14 {
-  type Q = (SparkSession, String) => DataFrame
+object Pipelines14 extends Module {
 
   def queries: Map[String, Q] = Map(
     // Skewness / excess kurtosis per return flag from EXACT integer

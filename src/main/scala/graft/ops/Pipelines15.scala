@@ -13,8 +13,7 @@ import org.apache.spark.sql.functions._
   * vector math, squared-threshold comparisons instead of sqrt where
   * a comparison decides membership, explicit tiebreaks everywhere.
   */
-object Pipelines15 {
-  type Q = (SparkSession, String) => DataFrame
+object Pipelines15 extends Module {
 
   def queries: Map[String, Q] = Map(
     // Semantic near-duplicate pairs, SemDeDup-shaped: vectors are
@@ -67,8 +66,6 @@ object Pipelines15 {
     // accumulation; the reported cosine is the only float and is
     // rounded.
     "llm_dedup_semantic" -> ((s, d) => {
-      graft.functions.LongDotProduct.register(s)
-      graft.functions.SignLsh.register(s)
       val qarr = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding"),
           expr("transform(embedding, x -> coalesce(cast(floor(cast(x as double) * 1000 + 0.5) as bigint), 0L))")

@@ -24,8 +24,7 @@ import org.apache.spark.sql.functions._
   * Their RESULTS are oracle-checked like any key; the optimizer
   * behavior itself is asserted on the physical plan in Round7Spec.
   */
-object Pipelines16 {
-  type Q = (SparkSession, String) => DataFrame
+object Pipelines16 extends Module {
 
   def queries: Map[String, Q] = Map(
     // Join-driven Dynamic Partition Pruning — the single biggest

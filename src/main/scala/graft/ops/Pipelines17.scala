@@ -14,8 +14,7 @@ import org.apache.spark.sql.functions._
   * (template spam) before they quadratically dominate a 100 TB
   * bucket. SURVEY §2.0 determinism rules apply throughout.
   */
-object Pipelines17 {
-  type Q = (SparkSession, String) => DataFrame
+object Pipelines17 extends Module {
 
   def queries: Map[String, Q] = Map(
     // max_by / min_by (argmax/argmin) per segment. The comparison key

@@ -14,8 +14,7 @@ import org.apache.spark.sql.functions._
   * LOCF output is floor(v·1000) (floor of the same IEEE double is
   * engine-exact; round() is not), everything else is integer.
   */
-object Pipelines18 {
-  type Q = (SparkSession, String) => DataFrame
+object Pipelines18 extends Module {
 
   def queries: Map[String, Q] = Map(
     // Last-observation-carried-forward: each event carries the most

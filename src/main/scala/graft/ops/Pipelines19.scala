@@ -11,8 +11,7 @@ import org.apache.spark.sql.functions._
   * histogram, nested-struct column pruning through a parquet
   * round-trip, and second-order event-path transitions.
   */
-object Pipelines19 {
-  type Q = (SparkSession, String) => DataFrame
+object Pipelines19 extends Module {
 
   def queries: Map[String, Q] = Map(
     // TPC-H Q19 shape: an OR-of-ANDs predicate spanning both join

@@ -15,8 +15,7 @@ import org.apache.spark.sql.functions._
   * generation is an equi-join on (entity, bin) with work proportional
   * to bin occupancy, never to the quadratic pair space.
   */
-object Pipelines2 {
-  type Q = (SparkSession, String) => DataFrame
+object Pipelines2 extends Module {
 
   /** Cross-engine-stable 32-bit hash of a string expression (md5 hex
     * prefix — same recipe as LlmScale.hvExpr). */
@@ -83,7 +82,6 @@ object Pipelines2 {
     // to a fixpoint (3-5 rounds in practice); the declared key is the
     // deterministic first round.
     "llm_dedup_cluster" -> ((s, d) => {
-      graft.functions.SortedIntersectSize.register(s)
       val toks = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"),
                 array_sort(array_distinct(
@@ -94,7 +92,6 @@ object Pipelines2 {
         // sides of the blocked edge join derive from this; lazily the
         // broadcast build re-runs the corpus tokenize+hash pipeline.
         .localCheckpoint()
-      graft.plans.IntersectLengthPrune.enable(s)
       val para = s.conf.get("spark.sql.shuffle.partitions").toInt
       val edges = toks.repartition(para, col("doc_id")).as("a")
         .join(toks.as("b"),
@@ -146,7 +143,6 @@ object Pipelines2 {
     // set is touched exactly twice (min round + contraction) instead
     // of once per propagation round.
     "llm_dedup_cc" -> ((s, d) => {
-      graft.functions.SortedIntersectSize.register(s)
       val toks = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"),
                 array_sort(array_distinct(
@@ -157,7 +153,6 @@ object Pipelines2 {
         // sides of the blocked edge join derive from this; lazily the
         // broadcast build re-runs the corpus tokenize+hash pipeline.
         .localCheckpoint()
-      graft.plans.IntersectLengthPrune.enable(s)
       // Salted lang-blocked edge join (round 7): keyed on lang alone
       // the 3.2M within-lang merge walks land on |langs|=5 shuffle
       // tasks — 5 of 32 cores busy. The right side maps each doc to

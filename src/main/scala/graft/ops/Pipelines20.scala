@@ -10,8 +10,7 @@ import org.apache.spark.sql.functions._
   * over the LSH kNN graph (iterative graph computation as repeated
   * joins), and a vocabulary coverage curve.
   */
-object Pipelines20 {
-  type Q = (SparkSession, String) => DataFrame
+object Pipelines20 extends Module {
 
   def queries: Map[String, Q] = Map(
     // Asymmetric CONTAINMENT dedup — the criterion Jaccard misses: a
@@ -26,8 +25,6 @@ object Pipelines20 {
     // All ratios are integer basis points — no float reaches the
     // comparator.
     "llm_doc_containment" -> ((s, d) => {
-      graft.functions.SortedIntersectSize.register(s)
-      graft.plans.IntersectLengthPrune.enable(s)
       val toks = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"),
                 array_sort(array_distinct(

@@ -10,8 +10,7 @@ import org.apache.spark.sql.functions._
   * reconciliation, parameterized SQL, and the standard-SQL
   * EXCLUDE-CURRENT-ROW frame semantic in integer form.
   */
-object Pipelines21 {
-  type Q = (SparkSession, String) => DataFrame
+object Pipelines21 extends Module {
 
   def queries: Map[String, Q] = Map(
     // Collation-aware grouping (Spark 4 collations): group event types

@@ -8,8 +8,7 @@ import org.apache.spark.sql.functions._
   * counting from mergeable day-grain sketches — the composition that
   * makes "trailing 7-day actives" affordable at 100 TB.
   */
-object Pipelines22 {
-  type Q = (SparkSession, String) => DataFrame
+object Pipelines22 extends Module {
 
   def queries: Map[String, Q] = Map(
     // Trailing-7-day distinct users per day. The naive form re-scans

@@ -11,8 +11,7 @@ import org.apache.spark.sql.functions._
   * heavy-hitters sketch, the map higher-order-function family, and
   * interval arithmetic.
   */
-object Pipelines23 {
-  type Q = (SparkSession, String) => DataFrame
+object Pipelines23 extends Module {
 
   /** Top-3-cosine kNN edges within 5-plane sign-LSH cells — the same
     * edge set as `llm_knn_graph_lsh` / `graph_pagerank_knn` (see

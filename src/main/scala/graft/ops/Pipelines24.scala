@@ -10,8 +10,7 @@ import org.apache.spark.sql.functions._
   * Spark 4's built-in XML source, and a deep recursive-CTE series
   * (UnionLoop beyond toy depth).
   */
-object Pipelines24 {
-  type Q = (SparkSession, String) => DataFrame
+object Pipelines24 extends Module {
 
   def queries: Map[String, Q] = Map(
     // Mergeable heavy hitters — the rollup twin of `agg_approx_topk`

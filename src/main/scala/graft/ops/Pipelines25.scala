@@ -9,8 +9,7 @@ import org.apache.spark.sql.functions._
   * ALL, declarative SQL scalar UDFs (CREATE FUNCTION ... RETURN), URL
   * decomposition, and offset-zone timestamp conversion.
   */
-object Pipelines25 {
-  type Q = (SparkSession, String) => DataFrame
+object Pipelines25 extends Module {
 
   def queries: Map[String, Q] = Map(
     // EXACT distinct counting via Spark-4 bitmap functions — the

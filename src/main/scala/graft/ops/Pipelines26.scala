@@ -9,8 +9,7 @@ import org.apache.spark.sql.functions._
   * hidden file columns, printf formatting, URL-normalization dedup,
   * and SCD2 interval compression.
   */
-object Pipelines26 {
-  type Q = (SparkSession, String) => DataFrame
+object Pipelines26 extends Module {
 
   def queries: Map[String, Q] = Map(
     // Spark 4's SQL pipe syntax (|>): the linear FROM → WHERE → EXTEND

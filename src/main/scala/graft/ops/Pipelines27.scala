@@ -15,8 +15,7 @@ import org.apache.spark.sql.functions._
   * arithmetic until one final rounded division, no nullable doubles,
   * every key ends in an ORDER BY.
   */
-object Pipelines27 {
-  type Q = (SparkSession, String) => DataFrame
+object Pipelines27 extends Module {
 
   def queries: Map[String, Q] = Map(
     // Exact 3-gram Jaccard ≥ 0.5 duplicate pairs via PREFIX FILTERING
@@ -45,7 +44,6 @@ object Pipelines27 {
     // doc_id (bounded group = doc shingle count); candidates are an
     // equi-join on the prefix shingle.
     "llm_dedup_prefix_filter" -> ((s, d) => {
-      graft.functions.SortedIntersectSize.register(s)
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), split(col("text"), " ").as("t"))
         // Guard: for <3 tokens sequence(1, size-2) has start > stop and
@@ -271,7 +269,6 @@ object Pipelines27 {
     // audit: hubs quarantined, docs kept, candidate and confirmed
     // pair counts among the kept.
     "llm_dedup_hub_quarantine" -> ((s, d) => {
-      graft.functions.SortedIntersectSize.register(s)
       val P = 2147483647L
       val A = Seq(100003L, 122251L, 135637L, 161423L, 173431L, 188677L,
                   199831L, 224737L, 350377L, 411637L, 467237L, 524287L,

@@ -19,8 +19,7 @@ import org.apache.spark.sql.functions._
   * integer arithmetic until one final division, money in integer
   * cents, every key ends in an ORDER BY.
   */
-object Pipelines28 {
-  type Q = (SparkSession, String) => DataFrame
+object Pipelines28 extends Module {
 
   /** The radius-with-np probe-bucket set (round 13): every bucket
     * within Hamming radius `r` of `bucket` over `np` planes, as
@@ -520,7 +519,6 @@ object Pipelines28 {
     // margin-directed radius-r probing), which holds 0.733 at both
     // 20 M and 40 M and leads from the fifth decade on.
     "llm_sim_topk_lsh_adaptive" -> ((s, d) => {
-      graft.functions.CosineSimilarity.register(s)
       val planes = Tables.embeddings(s, d)
         .agg(count(lit(1)).as("n_vecs"))
         .select(greatest(lit(3),

@@ -14,8 +14,7 @@ import org.apache.spark.sql.functions._
   * apply: integer arithmetic until one final division, every key ends
   * in an ORDER BY.
   */
-object Pipelines29 {
-  type Q = (SparkSession, String) => DataFrame
+object Pipelines29 extends Module {
 
   def queries: Map[String, Q] = Map(
     // Approximate kNN GRAPH with the plane count derived in-plan:
@@ -92,8 +91,6 @@ object Pipelines29 {
     // pair set identical, zero hub rows — the gate's declared no-op
     // point, with the predicate itself mirrored in the oracle.
     "llm_dedup_embedding_lsh_or" -> ((s, d) => {
-      graft.functions.FloatDotProduct.register(s)
-      graft.functions.CosineSimilarity.register(s)
       val nv = Tables.embeddings(s, d)
         .agg(count(lit(1)).as("n_vecs"))
         .select(least(lit(15), greatest(lit(3),

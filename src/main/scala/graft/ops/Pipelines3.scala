@@ -18,8 +18,7 @@ import org.apache.spark.sql.functions._
   * cardinalities), and the one small set in every join (benchmark
   * n-grams, customer dim, probe vectors) is broadcast.
   */
-object Pipelines3 {
-  type Q = (SparkSession, String) => DataFrame
+object Pipelines3 extends Module {
 
   /** Cross-engine-stable 32-bit hash (md5 hex prefix; same recipe as
     * LlmScale.hvExpr / Pipelines2.hv32). */
@@ -483,7 +482,6 @@ object Pipelines3 {
     // partial-aggregates before the single shuffle on the (uniform)
     // ngram key.
     "str_ngram_generate" -> ((s, d) => {
-      graft.functions.NGramsGenerator.register(s)
       Tables.documents(s, d)
         .withColumn("toks", split(col("text"), " "))
         .createOrReplaceTempView("graft_ng_docs")

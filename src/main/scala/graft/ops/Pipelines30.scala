@@ -18,8 +18,7 @@ import org.apache.spark.sql.functions._
   * rankings are total-ordered (rounded cosine desc, id asc), recall is
   * an integer percentage via `div`, every key ends in an ORDER BY.
   */
-object Pipelines30 {
-  type Q = (SparkSession, String) => DataFrame
+object Pipelines30 extends Module {
 
   /** COMPOSED OR × radius sign-LSH top-k (round 14 — VERDICT r13 task
     * 2, converting the r13 weak mark). The r13 form probed exactly one
@@ -108,8 +107,6 @@ object Pipelines30 {
   private def orRadiusTopkBudgeted(
       s: SparkSession, d: String, budgetExpr: String,
       maskSetExpr: String = Pipelines28.marginMaskSet): DataFrame = {
-    graft.functions.CosineSimilarity.register(s)
-    graft.functions.SignLsh.register(s)
     val nv = Tables.embeddings(s, d)
       .agg(count(lit(1)).as("n_vecs"))
       .select(least(lit(31), greatest(lit(3),
@@ -213,7 +210,6 @@ object Pipelines30 {
   private def ivfBatchTopk(s: SparkSession, d: String,
       probePred: org.apache.spark.sql.Column =
         col("vec_id") % 50 === 0): DataFrame = {
-    graft.functions.CosineSimilarity.register(s)
     def cosine(a: String, b: String) =
       expr(s"graft_cosine_sim($a, $b)")
     val e = Tables.embeddings(s, d).select("vec_id", "embedding")
@@ -291,7 +287,6 @@ object Pipelines30 {
     // fixture-only test: run it on a sample of a production corpus and
     // every search dial's measured recall comes out as one table.
     "llm_sim_recall_audit" -> ((s, d) => {
-      graft.functions.CosineSimilarity.register(s)
       val e = Tables.embeddings(s, d).select("vec_id", "embedding")
       val probes = e.filter(col("vec_id") < 10 ||
           (col("vec_id") % 50 === 0 && col("vec_id") < 500))

@@ -18,8 +18,7 @@ import org.apache.spark.sql.functions._
   * integer PageRank micro-units, rounded cosines with id tiebreaks,
   * every key ends in an ORDER BY.
   */
-object Pipelines31 {
-  type Q = (SparkSession, String) => DataFrame
+object Pipelines31 extends Module {
 
   /** Catalog-safe table name, unique per Spark application (same
     * contract as Sinks.ident: two sessions sharing a metastore must
@@ -151,7 +150,6 @@ object Pipelines31 {
     * N·k ever sorts — the round-14 SortAggregate finding). */
   private[graft] def assignCells(s: SparkSession, rows: DataFrame,
                                  cents: DataFrame): DataFrame = {
-    graft.functions.CosineSimilarity.register(s)
     val scores = rows.join(broadcast(cents))
       .select(col("vec_id"), col("cent_id"),
               (round(expr("graft_cosine_sim(embedding, ce)"), 4) + 0.0)
@@ -189,7 +187,6 @@ object Pipelines31 {
   private[graft] def probeTopk(s: SparkSession, probes: DataFrame,
       sidecar: DataFrame,
       refine: Array[Long] => DataFrame): DataFrame = {
-    graft.functions.CosineSimilarity.register(s)
     def cosine(a: String, b: String) = expr(s"graft_cosine_sim($a, $b)")
     val npTab = sidecar.agg(
       greatest(lit(2L), expr("count(1) div 16")).as("np"))

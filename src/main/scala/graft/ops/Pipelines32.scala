@@ -28,8 +28,7 @@ import org.apache.spark.sql.functions._
   * rounded cosines with id tiebreaks, integer micro-units with
   * non-negative `div` numerators, every key ends in an ORDER BY.
   */
-object Pipelines32 {
-  type Q = (SparkSession, String) => DataFrame
+object Pipelines32 extends Module {
 
   /** Cell-group count for the delete key's partition-dir layout: the
     * ≤ 4096 cells fold into 64 directories, so a compaction rewrite
@@ -212,7 +211,6 @@ object Pipelines32 {
     // never sees a negative numerator (Spark `div` truncates toward
     // zero, DuckDB `//` floors — they agree on non-negatives, §2.0).
     "llm_ivf_drift_audit" -> ((s, d) => {
-      graft.functions.CosineSimilarity.register(s)
       val sh = IvfLifecycle.resolve(s, d)
       val audited = sh.deltaSeg(s).withColumn("cohort", lit("appended"))
         .unionAll(sh.baseSeg(s).filter(col("vec_id") % 20 === 3)

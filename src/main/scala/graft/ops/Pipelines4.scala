@@ -11,11 +11,9 @@ import org.apache.spark.sql.functions._
   * Determinism rules of §2.0 apply: rounded doubles with id tiebreaks,
   * integer-exact arithmetic wherever a threshold or weight is compared.
   */
-object Pipelines4 {
-  type Q = (SparkSession, String) => DataFrame
+object Pipelines4 extends Module {
 
   private def cosine(s: SparkSession, a: String, b: String): Column = {
-    graft.functions.CosineSimilarity.register(s)
     expr(s"graft_cosine_sim($a, $b)")
   }
 

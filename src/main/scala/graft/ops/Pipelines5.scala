@@ -14,8 +14,7 @@ import org.apache.spark.sql.functions._
   * throughout: total output order with id tiebreaks, rounded float
   * aggregates, explicit aliases, engine-mirrored expression shapes.
   */
-object Pipelines5 {
-  type Q = (SparkSession, String) => DataFrame
+object Pipelines5 extends Module {
 
   def queries: Map[String, Q] = Map(
     // Gaps-and-islands sessionization in batch: a session breaks when

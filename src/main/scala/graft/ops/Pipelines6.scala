@@ -12,8 +12,7 @@ import org.apache.spark.sql.functions._
   * Q17/Q22 decorrelated-subquery shapes. SURVEY §2.0 determinism
   * rules apply throughout.
   */
-object Pipelines6 {
-  type Q = (SparkSession, String) => DataFrame
+object Pipelines6 extends Module {
 
   /** 32-bit md5-prefix hash of a string column as a positive long —
     * identical in both engines (see Pipelines5.md5h32).

@@ -11,8 +11,7 @@ import org.apache.spark.sql.functions._
   * pair mining, and share-of-total window analytics. SURVEY §2.0
   * determinism rules apply throughout.
   */
-object Pipelines7 {
-  type Q = (SparkSession, String) => DataFrame
+object Pipelines7 extends Module {
 
   def queries: Map[String, Q] = Map(
     // Bloom-filter join screen, audited: the mechanism behind Spark's

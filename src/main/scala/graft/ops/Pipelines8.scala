@@ -10,8 +10,7 @@ import org.apache.spark.sql.functions._
   * z-score anomaly flagging over hourly series, and a token-length
   * histogram. SURVEY §2.0 determinism rules apply throughout.
   */
-object Pipelines8 {
-  type Q = (SparkSession, String) => DataFrame
+object Pipelines8 extends Module {
 
   def queries: Map[String, Q] = Map(
     // MinHash Jaccard audit: for banded candidate pairs on a fixed
@@ -25,7 +24,6 @@ object Pipelines8 {
     // agg_countmin_freq / join_bloom_screen: every sketch ships with
     // its measured error.
     "llm_minhash_jaccard_audit" -> ((s, d) => {
-      graft.functions.SortedIntersectSize.register(s)
       val P = 2147483647L
       val A = Seq(100003L, 122251L, 135637L, 161423L, 173431L, 188677L,
                   199831L, 224737L, 350377L, 411637L, 467237L, 524287L,

@@ -12,8 +12,7 @@ import org.apache.spark.sql.functions._
   * the LSH recall audit that completes the measured-error story for
   * the dedup path. SURVEY §2.0 determinism rules apply throughout.
   */
-object Pipelines9 {
-  type Q = (SparkSession, String) => DataFrame
+object Pipelines9 extends Module {
 
   def queries: Map[String, Q] = Map(
     // TPC-H Q8 shape (national market share): one conditional
@@ -136,7 +135,6 @@ object Pipelines9 {
     // fixture's typical J ≥ 0.88 — the audit REPORTS the realized
     // blend rather than assuming it.
     "llm_dedup_lsh_recall" -> ((s, d) => {
-      graft.functions.SortedIntersectSize.register(s)
       val P = 2147483647L
       val A = Seq(100003L, 122251L, 135637L, 161423L, 173431L, 188677L,
                   199831L, 224737L, 350377L, 411637L, 467237L, 524287L,

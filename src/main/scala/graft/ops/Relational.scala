@@ -13,8 +13,7 @@ import org.apache.spark.sql.functions._
   * output column is aliased, and integer-valued derived columns are
   * LongType to match DuckDB's BIGINT defaults.
   */
-object Relational {
-  type Q = (SparkSession, String) => DataFrame
+object Relational extends Module {
 
   def queries: Map[String, Q] = Map(
     // ---- §2.2 scans ------------------------------------------------

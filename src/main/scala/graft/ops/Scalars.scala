@@ -16,8 +16,7 @@ import org.apache.spark.sql.functions._
   * - Higher-order aggregate casts elements to double BEFORE multiply,
   *   on both sides, so accumulation precision matches.
   */
-object Scalars {
-  type Q = (SparkSession, String) => DataFrame
+object Scalars extends Module {
 
   def queries: Map[String, Q] = Map(
     "str_funcs" -> ((s, d) =>

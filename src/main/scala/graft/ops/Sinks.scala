@@ -18,8 +18,7 @@ import org.apache.spark.sql.functions._
   * repartition on the partition key, which keeps one file per day per
   * task rather than |tasks|×|days| small files).
   */
-object Sinks {
-  type Q = (SparkSession, String) => DataFrame
+object Sinks extends Module {
 
   /** Sink output root: configurable via `spark.graft.sink.root`, else
     * the JVM temp dir keyed by the Spark application id — never a

@@ -12,8 +12,7 @@ import org.apache.spark.sql.functions._
   * both sides: DuckDB's integer SUM returns HUGEINT, which would break
   * type parity with Spark's LongType.
   */
-object Social {
-  type Q = (SparkSession, String) => DataFrame
+object Social extends Module {
 
   def queries: Map[String, Q] = Map(
     // Flagship: per-user engagement — counts by type + total value,

@@ -17,8 +17,7 @@ import org.apache.spark.sql.functions._
   * write-drain-write scheduling) so the watermark late-data drop
   * itself is what the DuckDB oracle checks.
   */
-object Streaming {
-  type Q = (SparkSession, String) => DataFrame
+object Streaming extends Module {
 
   /** Distinct memory-sink name per stream_watermark_late invocation —
     * a reused name would read rows accumulated by an earlier run in

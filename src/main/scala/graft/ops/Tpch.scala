@@ -17,8 +17,7 @@ import org.apache.spark.sql.functions._
   * columns go through a decimal cast so partial/merge aggregation is
   * order-independent (exact) regardless of partition count.
   */
-object Tpch {
-  type Q = (SparkSession, String) => DataFrame
+object Tpch extends Module {
 
   /** Order-independent revenue sum: the double multiply is identical
     * on both engines, the decimal sum is exact under any partial-agg

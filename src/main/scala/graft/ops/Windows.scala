@@ -13,8 +13,7 @@ import org.apache.spark.sql.functions._
   * float aggregates are rounded (frame accumulation order is fixed by
   * the unique ordering, rounding absorbs last-ulp engine differences).
   */
-object Windows {
-  type Q = (SparkSession, String) => DataFrame
+object Windows extends Module {
 
   def queries: Map[String, Q] = Map(
     "win_rank_topk" -> ((s, d) => {

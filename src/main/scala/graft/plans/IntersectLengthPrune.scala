@@ -1,7 +1,6 @@
 package graft.plans
 
 import graft.functions.SortedIntersectSize
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -26,18 +25,6 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * present (the rule runs in a fixed-point batch).
   */
 object IntersectLengthPrune extends Rule[LogicalPlan] {
-
-  /** Make the rule active on an existing session (idempotent). The
-    * library-user path is `spark.sql.extensions=graft.GraftExtensions`
-    * which injects the same rule at session build time. */
-  def enable(s: SparkSession): Unit = {
-    // Append, don't assign: enable() runs as a side effect inside
-    // query builders on a shared session, and assignment would clobber
-    // any extra optimizer rules a library user already installed.
-    val cur = s.experimental.extraOptimizations
-    if (!cur.contains(IntersectLengthPrune))
-      s.experimental.extraOptimizations = cur :+ IntersectLengthPrune
-  }
 
   private def positive(k: Literal): Boolean = k.value match {
     case i: java.lang.Integer => i > 0

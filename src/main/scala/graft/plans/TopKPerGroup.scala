@@ -4,7 +4,7 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Descending, Expression, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
@@ -110,22 +110,13 @@ object TopKStrategy extends SparkStrategy {
 }
 
 object TopKPerGroup {
-  /** Make the strategy active on an existing session (append-if-absent
-    * — never clobber user-installed strategies). The library-user path
-    * is `spark.sql.extensions=graft.GraftExtensions`. */
-  def enable(s: SparkSession): Unit = {
-    val cur = s.experimental.extraStrategies
-    if (!cur.contains(TopKStrategy))
-      s.experimental.extraStrategies = cur :+ TopKStrategy
-  }
-
   /** Top-k rows per group of `df` under `(name, descending)` order.
     * The order should be total within groups (unique tiebreak) for a
     * deterministic result. */
   def apply(df: DataFrame, groupCols: Seq[String],
             orderCols: Seq[(String, Boolean)], k: Int): DataFrame = {
     val spark = df.sparkSession
-    enable(spark)
+    graft.Graft.install(spark)
     val analyzed = df.queryExecution.analyzed
     def attr(n: String): Attribute = analyzed.output
       .find(_.name == n)

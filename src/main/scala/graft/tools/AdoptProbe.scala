@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Cross-application index ADOPTION probe (round 18 — VERDICT r17
@@ -30,10 +29,7 @@ object AdoptProbe {
     System.setProperty("graft.ivf.adopt", "true")
     val dir = args(0)
     val corrupt = args.contains("corrupt")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Graft.session()
     spark.sparkContext.setLogLevel("ERROR")
 
     if (corrupt) {

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Read-volume probe for a persisted IVF index (round 16 — VERDICT r15
@@ -25,9 +25,7 @@ object BytesProbe {
     val idx = args(0)
     val nCellsSweep = if (args.length > 1) args.drop(1).map(_.toInt).toSeq
                       else Seq(2, 80, 2560)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Graft.session()
     spark.sparkContext.setLogLevel("ERROR")
     sys.env.get("BYTESPROBE_IN_THRESHOLD").foreach(t =>
       spark.conf.set("spark.sql.parquet.pushdown.inFilterThreshold", t))

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Delete-lifecycle probe at corpus scale (round 16, re-based round 17
   * on the shared lifecycle artifact — evidence behind
@@ -32,10 +31,7 @@ import org.apache.spark.sql.SparkSession
   */
 object DeleteProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Graft.session()
     spark.sparkContext.setLogLevel("ERROR")
     import org.apache.spark.sql.functions._
 

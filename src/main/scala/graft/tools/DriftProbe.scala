@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -37,12 +37,8 @@ object DriftProbe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val copies = if (args.length > 1) args(1).toInt else 100
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Graft.session()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.CosineSimilarity.register(spark)
 
     val centers = graft.Tables.embeddings(spark, dir)
       .select(col("vec_id").as("c_id"), col("embedding").as("ce0"))

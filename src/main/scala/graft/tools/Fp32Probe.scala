@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool: A/B of llm_fingerprint_simhash — the retired 32-bit-row
@@ -17,10 +17,7 @@ object Fp32Probe {
     val d = args(0)
     val copies = if (args.length > 1) args(1).toInt else 1
     val reps = if (args.length > 2) args(2).toInt else 3
-    val s = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val s = graft.Graft.session()
     s.sparkContext.setLogLevel("ERROR")
 
     val base = Tables.documents(s, d).select("doc_id", "text")

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -75,12 +75,8 @@ object IvfProbe {
     val nProbes = if (pos2.length > 1) pos2(1).toInt else 10
     val npSweep = if (pos2.length > 2) pos2(2).split(",").map(_.toInt).toSeq
                   else Seq(2, 4, 8, 16, 32, 64)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Graft.session()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.CosineSimilarity.register(spark)
 
     // Read-volume evidence: the scanned file-source LOCATIONS of a
     // section's plan (what an append job must never include: the

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-shot diagnostic behind the round-18 eighth-decade plateau:
@@ -20,12 +19,8 @@ import org.apache.spark.sql.functions._
 object OrDiag {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Graft.session()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.SignLsh.register(spark)
 
     val truth = graft.SparkEntry.queries("llm_sim_topk")(spark, dir)
       .select("probe_id", "neighbor_id", "cos_sim").localCheckpoint()

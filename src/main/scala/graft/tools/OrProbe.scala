@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Stage-volume diagnostic for the REJECTED skinny-first shape of
@@ -16,10 +15,7 @@ import org.apache.spark.sql.functions._
 object OrProbe {
   def main(args: Array[String]): Unit = {
     val d = args(0)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Graft.session()
     spark.sparkContext.setLogLevel("ERROR")
     import graft.Tables
 
@@ -74,8 +70,6 @@ object OrProbe {
     println(f"OR-PROBE distinct candidates: $nCand " +
       f"(${(System.nanoTime() - t0) / 1e9}%.1f s)")
 
-    graft.functions.FloatDotProduct.register(spark)
-    graft.functions.CosineSimilarity.register(spark)
     val e = Tables.embeddings(spark, d).select("vec_id", "embedding")
       .withColumn("nrm", sqrt(expr("graft_dot_f(embedding, embedding)")))
     t0 = System.nanoTime()

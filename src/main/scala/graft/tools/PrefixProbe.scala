@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.Tables
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -13,10 +12,7 @@ import org.apache.spark.sql.functions._
 object PrefixProbe {
   def main(args: Array[String]): Unit = {
     val d = args(0)
-    val s = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val s = graft.Graft.session()
     s.sparkContext.setLogLevel("ERROR")
     def time(label: String)(f: => Long): Unit = {
       val t0 = System.nanoTime()

@@ -78,10 +78,7 @@ object RecallProbe {
       case a if a.nonEmpty && a.head == "reuse" => (true, a.tail)
       case a => (false, a)
     }
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Graft.session()
     spark.sparkContext.setLogLevel("ERROR")
 
     val t0 = System.nanoTime()

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale probe: how do the flagship operators behave at N× the bench
@@ -111,10 +110,8 @@ object ScaleProbe {
       case a if a.nonEmpty && a.head == "nogen" => (true, a.tail)
       case a => (false, a)
     }
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", parts.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Graft.session()
+    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
     spark.sparkContext.setLogLevel("ERROR")
 
     val t0 = System.nanoTime()

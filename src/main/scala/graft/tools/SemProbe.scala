@@ -14,7 +14,6 @@ import org.apache.spark.sql.functions._
   */
 object SemProbe {
   def assignment(s: SparkSession, d: String): DataFrame = {
-    graft.functions.LongDotProduct.register(s)
     val qarr = graft.Tables.embeddings(s, d)
       .select(col("vec_id"),
         expr("transform(embedding, x -> coalesce(cast(floor(cast(x as double) * 100 + 0.5) as bigint), 0L))")
@@ -58,10 +57,7 @@ object SemProbe {
 
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Graft.session()
     spark.sparkContext.setLogLevel("ERROR")
     val cells = assignment(spark, dir).groupBy("c").count()
     val stats = cells.agg(

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Top-k recall probe for the ANN search family.
@@ -34,10 +33,7 @@ object TopkProbe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val keys = args.drop(1)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Graft.session()
     spark.sparkContext.setLogLevel("ERROR")
 
     var t0 = System.nanoTime()

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -23,10 +23,7 @@ object UserRankProbe {
     val nUsers = args(0).toLong
     val dist = if (args.length > 1) args(1) else "zipf"
     val reps = if (args.length > 2) args(2).toInt else 3
-    val s = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val s = graft.Graft.session()
     s.sparkContext.setLogLevel("ERROR")
 
     val countExpr = dist match {

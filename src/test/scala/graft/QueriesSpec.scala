@@ -5,17 +5,21 @@ import org.scalatest.funsuite.AnyFunSuite
 
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Graft.session()
     s.sparkContext.setLogLevel("WARN")
     s
   }
   val sf = "/root/testdata/sf0.001"
+}
+
+/** Two modules that both declare key `k`. */
+object ClashFirst extends ops.Module {
+  def queries: Map[String, Q] = Map("k" -> ((s, _) => s.range(1).toDF()))
+  def oracles: Map[String, String] = Map.empty
+}
+object ClashSecond extends ops.Module {
+  def queries: Map[String, Q] = Map("k" -> ((s, _) => s.range(2).toDF()))
+  def oracles: Map[String, String] = Map.empty
 }
 
 /** Layer-2 unit tests (SURVEY §5): every declared query runs on
@@ -42,6 +46,11 @@ class QueriesSpec extends AnyFunSuite {
   test("every oracle key is a declared query") {
     val undeclared = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(undeclared.isEmpty, s"oracles without queries: $undeclared")
+  }
+
+  test("registry rejects a key that two modules declare") {
+    val e = intercept[IllegalStateException](SparkEntry.registry(Seq(ClashFirst, ClashSecond)))
+    assert(e.getMessage == "query key 'k' is declared by both ClashFirst and ClashSecond")
   }
 
   test("scan_count equals fixture row count") {

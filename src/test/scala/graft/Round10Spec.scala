@@ -26,7 +26,6 @@ class Round10Spec extends AnyFunSuite {
                               element_at(t, i + 2))),
            g -> xxhash64(g))"""))).as("th"))
       .withColumn("n", size(col("th")).cast("long"))
-    graft.functions.SortedIntersectSize.register(spark)
     val brute = sh.as("a").join(sh.as("b"),
         col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("ai"), col("b.doc_id").as("bi"),

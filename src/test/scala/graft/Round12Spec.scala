@@ -138,8 +138,6 @@ class Round12Spec extends AnyFunSuite {
     // threshold neighborhood), no pair the exact filter keeps may
     // fail the screen — the slack must absorb all fp disagreement
     // between dot/(|a||b|) and the fused cosine evaluation.
-    graft.functions.FloatDotProduct.register(spark)
-    graft.functions.CosineSimilarity.register(spark)
     val e = Tables.embeddings(spark, sf).select("vec_id", "embedding")
       .withColumn("nrm", sqrt(expr("graft_dot_f(embedding, embedding)")))
     val leaked = e.as("a").join(e.as("b"),

@@ -19,7 +19,6 @@ class Round12dSpec extends AnyFunSuite {
   import TestSpark._
 
   test("full-bucket slice t=0 equals the single-table bucket (np=3)") {
-    graft.functions.SignLsh.register(spark)
     val bad = Tables.embeddings(spark, sf)
       .select(expr("graft_sign_lsh(embedding, 12)").as("allb"),
               expr("graft_sign_lsh(embedding, 3)").as("b0"))
@@ -29,7 +28,6 @@ class Round12dSpec extends AnyFunSuite {
   }
 
   test("slice t equals the explicit plane-offset bucket for all 4 tables") {
-    graft.functions.SignLsh.register(spark)
     (0 until 4).foreach { t =>
       // Reference: the HOF bucket over GLOBAL plane indices
       // t*3 .. t*3+2 — the plane normal depends only on the global

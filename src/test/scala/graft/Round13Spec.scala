@@ -69,7 +69,6 @@ class Round13Spec extends AnyFunSuite {
     // replicates over all 8, so each in-cell pair meets exactly once
     // and the edge set (ids AND cos_sim AND ranks) is bit-identical
     // to the unsalted reference join.
-    graft.functions.CosineSimilarity.register(spark)
     val salted = ops.KnnEdges.topkEdges(spark, sf)
       .select("src_id", "dst_id", "np", "cos_sim", "rnk")
     val planes = Tables.embeddings(spark, sf)
@@ -122,7 +121,6 @@ class Round13Spec extends AnyFunSuite {
     // with an UNSALTED join and a plain row_number window — so the
     // differential exercises exactly the two mechanisms the shipped
     // plan adds (salt replication, heap-based top-k).
-    graft.functions.CosineSimilarity.register(spark)
     val dir = java.nio.file.Files.createTempDirectory("knnhot").toString
     // Coordinate 0 carries ~100× the mass of the other 63, so every
     // ±1 hyperplane's sign is s_{p,0} for every vector — the cluster
@@ -190,7 +188,6 @@ class Round13Spec extends AnyFunSuite {
     // Active side: the d>0 test's near-parallel corpus — one
     // irreducible subcell of 2600 > CAP — must quarantine EVERY
     // vector and emit no edges.
-    graft.functions.CosineSimilarity.register(spark)
     val dir = java.nio.file.Files.createTempDirectory("knnhub").toString
     spark.range(2600)
       .selectExpr("id as vec_id",

@@ -118,7 +118,6 @@ class Round15Spec extends AnyFunSuite {
     // normal depends only on its global index g, so a projection
     // started at offset `off` is exactly the tail slice of a larger
     // one. Offset 0 must reproduce the 2-arg form bit-for-bit.
-    graft.functions.SignLsh.register(spark)
     val e = Tables.embeddings(spark, sf)
     for ((n, off) <- Seq((3, 3), (5, 10), (12, 12), (7, 0), (15, 15))) {
       val bad = e.select(
@@ -142,7 +141,6 @@ class Round15Spec extends AnyFunSuite {
     // np ≤ 15 — every point the r14 form could reach — table t's
     // bucket must be bit-identical to the old single 4·np-bit
     // projection's slice [t·np, (t+1)·np). np = 3 here (fixture).
-    graft.functions.SignLsh.register(spark)
     val np = 3
     val e = Tables.embeddings(spark, sf).select(
       expr(s"graft_sign_lsh(embedding, ${4 * np})").as("allb"),
@@ -165,7 +163,6 @@ class Round15Spec extends AnyFunSuite {
     // accumulators, so the bucket must be exactly reconstructible —
     // the identity that makes margin-directed probing sound (a flip
     // mask's planes are the ones whose sign is least certain).
-    graft.functions.SignLsh.register(spark)
     val e = Tables.embeddings(spark, sf)
     for ((np, off) <- Seq((5, 0), (9, 3), (15, 30))) {
       val bad = e.select(
@@ -187,7 +184,6 @@ class Round15Spec extends AnyFunSuite {
     // measured point <= 8.2M vectors are bit-identical. Uses real
     // margins from fixture embeddings at np = 12, r = 2 (both
     // fragments in one projection's scope).
-    graft.functions.SignLsh.register(spark)
     val prepared = Tables.embeddings(spark, sf).limit(20)
       .withColumn("np", lit(12))
       .withColumn("r", lit(2))
@@ -210,7 +206,6 @@ class Round15Spec extends AnyFunSuite {
     // (probe, table), every mask flips <= r+2 = 5 planes, and the cut
     // is cheapest-first — the costliest kept mask is <= the cheapest
     // dropped one under the (cost, flip) total order.
-    graft.functions.SignLsh.register(spark)
     val prepared = Tables.embeddings(spark, sf).limit(5)
       .withColumn("np", lit(17))
       .withColumn("r", lit(3))

@@ -95,7 +95,6 @@ class Round16Spec extends AnyFunSuite {
     // np = 15 (the depth-3 arm switches on via `r >= 3` while the
     // depth-4/5 arms stay gated on np > 15), and the unlimited
     // budget must still cover the whole Σ_{k<=3}C(15,k) = 576 ball.
-    graft.functions.SignLsh.register(spark)
     val prepared = Tables.embeddings(spark, sf).limit(20)
       .withColumn("np", lit(15))
       .withColumn("r", lit(3))

@@ -54,7 +54,6 @@ class Round17Spec extends AnyFunSuite {
     // single-partition sort at 10^11) and requires value equality,
     // row for row, column for column.
     import org.apache.spark.sql.expressions.Window
-    graft.functions.CosineSimilarity.register(spark)
     val out = SparkEntry.queries("llm_ivf_drift_audit")(spark, sf)
     val e = Tables.embeddings(spark, sf).select("vec_id", "embedding")
     val base = e.filter(col("vec_id") % 50 =!= 17)

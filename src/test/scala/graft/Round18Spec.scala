@@ -50,7 +50,6 @@ class Round18Spec extends AnyFunSuite {
     //      in-Spark derivation of the NEW oracle semantics
     //      (base-derived stride + centroid set + nprobe, full-corpus
     //      candidates) — value for value.
-    graft.functions.CosineSimilarity.register(spark)
     val dir = java.nio.file.Files
       .createTempDirectory("graft_r18_switchover").toString
     val nFull = 51L * 4096L // 208 896: full stride 51, base stride 50
@@ -235,7 +234,6 @@ class Round18Spec extends AnyFunSuite {
     // The non-deterministic flag constrains the optimizer only; the
     // evaluated value must be bit-identical on every input shape
     // (empty, disjoint, equal, interleaved, subset).
-    graft.functions.SortedIntersectSize.register(spark)
     val rows = spark.sql(
       """SELECT graft_sorted_intersect_size(a, b) AS s,
                 graft_sorted_intersect_once(a, b) AS o
@@ -256,7 +254,6 @@ class Round18Spec extends AnyFunSuite {
     // iteration-1 assignment with the retired window form and asserts
     // per-vector equality, so the argmin tie-break (dist asc, c asc)
     // can never drift.
-    graft.functions.LongDotProduct.register(spark)
     val qarr = Tables.embeddings(spark, sf)
       .select(col("vec_id"), expr(
         "transform(embedding, x -> coalesce(cast(floor(cast(x as double) * 1000 + 0.5) as bigint), 0L))")

@@ -139,7 +139,6 @@ class Round3Spec extends AnyFunSuite {
   }
 
   test("graft_ngrams generator equals the transform+explode formulation") {
-    functions.NGramsGenerator.register(spark)
     Tables.documents(spark, sf)
       .withColumn("toks", split(col("text"), " "))
       .createOrReplaceTempView("ng_test_docs")

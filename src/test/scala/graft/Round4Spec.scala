@@ -93,7 +93,6 @@ class Round4Spec extends AnyFunSuite {
   test("llm_dedup_ngram banded candidates lose no qualifying pair") {
     // The banded form IS the declared plan; this asserts it against the
     // exact lang-blocked quadratic reference formulation on the fixture.
-    graft.functions.SortedIntersectSize.register(spark)
     val sh = Tables.documents(spark, sf)
       .select(col("doc_id"), col("lang"), split(col("text"), " ").as("t"))
       .select(col("doc_id"), col("lang"),

@@ -106,7 +106,6 @@ class Round6dSpec extends AnyFunSuite {
   }
 
   test("graft_long_dot: codegen expression equals the HOF formulation") {
-    graft.functions.LongDotProduct.register(spark)
     val df = Tables.embeddings(spark, sf)
       .selectExpr(
         "transform(embedding, x -> coalesce(cast(floor(cast(x as double) * 1000 + 0.5) as bigint), 0L)) as qa")

@@ -193,20 +193,44 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("GraftExtensions injects the custom functions") {
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new GraftExtensions().apply(ext) // builder registration is well-formed
-    // per-session registration path drives the same builders through SQL
-    graft.functions.CosineSimilarity.register(spark)
-    graft.functions.SortedIntersectSize.register(spark)
-    val r = spark.sql(
-      """SELECT graft_cosine_sim(array(cast(1.0 as float), cast(0.0 as float)),
-                                 array(cast(1.0 as float), cast(0.0 as float)))
-                  AS c,
-                graft_sorted_intersect_size(array(1L, 2L, 5L),
-                                            array(2L, 5L, 9L)) AS i
-      """).collect()(0)
+    val injected = collection.mutable.ArrayBuffer.empty[Any]
+    val ext = new org.apache.spark.sql.SparkSessionExtensions {
+      override def injectFunction(f: FunctionDescription): Unit = {
+        injected += f._1.funcName
+        super.injectFunction(f)
+      }
+      override def injectOptimizerRule(b: RuleBuilder): Unit = injected += b(spark)
+      override def injectPlannerStrategy(b: StrategyBuilder): Unit = injected += b(spark)
+    }
+    new GraftExtensions().apply(ext)
+    val names = Graft.functions.map(_._1.funcName)
+    assert(names.size == 9)
+    assert(injected.toSeq == names ++ Graft.optimizerRules ++ Graft.strategies)
+    // install on a fresh session: every name resolves and evaluates in SQL
+    val s = spark.newSession()
+    Graft.install(s)
+    Graft.install(s) // idempotent
+    assert(s.experimental.extraOptimizations == Graft.optimizerRules)
+    assert(s.experimental.extraStrategies == Graft.strategies)
+    val f = "array(cast(1.0 as float), cast(0.0 as float))"
+    val l = "array(1L, 2L, 5L)"
+    val calls = Seq(
+      s"graft_cosine_sim($f, $f)", s"graft_cosine_once($f, $f)",
+      s"graft_sorted_intersect_size($l, array(2L, 5L, 9L))",
+      s"graft_sorted_intersect_once($l, array(2L, 5L, 9L))",
+      s"graft_sign_lsh($f, 4)", s"graft_sign_lsh_margins($f, 4, 2)",
+      s"graft_long_dot($l, $l)", s"graft_dot_f($f, $f)")
+    assert(calls.map(_.takeWhile(_ != '(')) ++ Seq("graft_ngrams") == names)
+    val r = s.sql(calls.mkString("SELECT ", ", ", "")).collect()(0)
     assert(math.abs(r.getDouble(0) - 1.0) < 1e-12)
-    assert(r.getLong(1) == 2L)
+    assert(math.abs(r.getDouble(1) - 1.0) < 1e-12)
+    assert(r.getLong(2) == 2L && r.getLong(3) == 2L)
+    assert(r.getLong(4) == s.sql(s"SELECT graft_sign_lsh($f, 4, 0)").head().getLong(0))
+    assert(r.getSeq[Long](5).size == 4)
+    assert(r.getLong(6) == 30L)
+    assert(r.getDouble(7) == 1.0)
+    val grams = s.sql("SELECT graft_ngrams(array('a', 'b', 'c'), 2)").collect()
+    assert(grams.map(_.getString(0)).toSeq == Seq("a b", "b c"))
   }
 
   test("session_window batch formulation matches gap-and-island semantics") {
