@@ -14,27 +14,25 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * corpus version and threads the SAME index through
   * append → drift-audit → delete → compact.
   *
-  * Round 18 (VERDICT r17 task 2 + ADVICE r17 item 1) makes the
-  * artifact CROSS-APPLICATION: it lives under a shared root keyed by
-  * a corpus FINGERPRINT (source parquet file names + sizes + mtimes),
-  * and a build runs in a private temp root and COMMITS by atomic
-  * directory rename, with a one-row MANIFEST (format version,
-  * fingerprint, segment counts) written last inside it. A later
-  * application's `resolve` ADOPTS a found artifact only after
-  * validating manifest fingerprint + format + all three segment
-  * counts against the files (metadata-only reads — adopt cost ≈ the
-  * read path, never the O(N·k) build); any mismatch — regenerated
-  * corpus, older format, truncated segment — REJECTS the artifact
-  * and rebuilds; a builder that loses the publish race validates and
-  * adopts the winner.
+  * The artifact is PER-APPLICATION: it lives at
+  * `<java.io.tmpdir>/graft_ivf_shared/graft_ivf_lc_<dir>_app_<appid>`,
+  * outside the per-application sink root, so the four lifecycle keys
+  * of one application share one build and every bench or verify
+  * invocation (a fresh JVM) pays the one O(N·k) build it claims to
+  * pay. Round 18 also built a cross-application adoption path (a
+  * corpus fingerprint plus a validated manifest let a later
+  * application reuse an earlier one's artifact); it was opt-in,
+  * because adoption made every timed run but the first skip the
+  * build, no key selected it, and it has been removed.
   * Liveness is heartbeat-based: every `resolve` touches
-  * `<root>/heartbeat`, the stale sweep only removes shared artifacts
-  * whose heartbeat is over an hour old, and a cache hit re-verifies
-  * the directories still exist (a concurrent application's sweep can
-  * no longer strand this one's cached handle — it rebuilds instead of
-  * failing with FileNotFoundException).
+  * `<root>/heartbeat`, the stale sweep only removes artifacts under
+  * the shared root whose heartbeat is over an hour old, and a cache
+  * hit re-verifies the directories still exist (a concurrent
+  * application's sweep can no longer strand this one's cached
+  * handle — it rebuilds instead of failing with
+  * FileNotFoundException).
   *
-  * The artifact is IMMUTABLE once committed — maintenance keys write
+  * The artifact is IMMUTABLE once built — maintenance keys write
   * their own overlays (tombstone table, compacted partitions, the
   * compaction manifest) beside it, never into it, so the keys stay
   * order-independent and re-runnable (BenchOne MIX repeats a single
@@ -58,14 +56,11 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *    append contract), same layout. The full-corpus index IS
   *    base ∪ delta — the immutable-segment-plus-delta file set every
   *    log-structured table format serves reads from.
-  *  - `manifest` — the one-row commit record (see above).
   *  - a BUCKETED catalog twin ([[resolveBucketed]]), built from the
   *    segments by RE-LAYOUT (no second assignment): base written
   *    bucketed-by-cell, delta bucket-APPENDED — the construction is
-  *    itself the incremental-append maintenance path. The twin stays
-  *    PER-APPLICATION (its catalog entry lives in this session's
-  *    metastore); an adopting application re-lays it out from the
-  *    adopted segments — one corpus read + write, never O(N·k).
+  *    itself the incremental-append maintenance path. Its catalog
+  *    entry lives in this session's metastore.
   *
   * Scale note, retired as a warning in round 18 (VERDICT r17 task 1):
   * the sidecar holds BASE-derived centroids (stride = max(50,
@@ -80,8 +75,8 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 object IvfLifecycle {
 
   /** Bumped whenever the assignment semantics or on-disk layout
-    * change: adoption validates it, so a new code version never
-    * trusts an old artifact. */
+    * change: the compaction manifest records it, so a new code
+    * version never trusts an old overlay. */
   private[graft] val FormatVersion = 3L
 
   /** Handle to the built artifact. `schema` pins the pgrp partition
@@ -109,71 +104,16 @@ object IvfLifecycle {
   private def cacheKey(s: SparkSession, d: String): (String, String) =
     (s.sparkContext.applicationId, d)
 
-  /** The cross-application artifact root (NOT under any per-app
-    * graft_sink_* dir — those are swept by app-scoped rules). */
-  private[graft] def sharedRoot: String =
+  /** The artifacts' parent (NOT under any per-app graft_sink_* dir —
+    * those are swept by app-scoped rules). */
+  private def sharedRoot: String =
     sys.props.getOrElse("java.io.tmpdir", "/tmp") + "/graft_ivf_shared"
 
-  /** Cross-application adoption is OPT-IN (`-Dgraft.ivf.adopt=true`),
-    * set only by AdoptProbe and the Round18Spec adoption pin. Default
-    * OFF, and deliberately so (round-18 optimization review): the
-    * bench/verify mains are re-run as fresh JVMs by the driver, and a
-    * fingerprint-keyed shared artifact would let invocation N+1 adopt
-    * invocation N's index — the O(N·k) build silently vanishes from
-    * every timed run but the first, which is cross-run result caching,
-    * not optimization. With adoption off the artifact root is keyed by
-    * applicationId: the WITHIN-application sharing across the four
-    * lifecycle keys (the r17 consolidation) is untouched, and every
-    * bench invocation pays the one build it claims to pay. The
-    * adoption machinery itself (fingerprint, manifest commit,
-    * validate-or-rebuild) is unchanged and demonstrated by the probe. */
-  private[graft] def adoptionEnabled: Boolean =
-    sys.props.get("graft.ivf.adopt").contains("true")
-
-  /** Corpus fingerprint from the SOURCE parquet's file-level metadata
-    * (names, sizes, mtimes — the same signal a table format's
-    * snapshot id carries): metadata-only, no data scan. A regenerated
-    * corpus changes it, so a stale artifact is named differently AND
-    * rejected by the manifest check. Falls back to an app-scoped
-    * token (adoption disabled) if the source isn't a listable local
-    * path — and uses the same app-scoped token whenever adoption is
-    * not opted into (see [[adoptionEnabled]]). */
-  private[graft] def corpusFingerprint(s: SparkSession, d: String): String = {
-    if (!adoptionEnabled)
-      return "app_" + s.sparkContext.applicationId
-        .replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-    val src = new java.io.File(s"$d/embeddings.parquet")
-    val files =
-      if (src.isFile) Seq(src)
-      else Option(src.listFiles()).toSeq.flatten
-        .filter(f => f.isFile && !f.getName.startsWith("_") &&
-                     !f.getName.startsWith("."))
-        .sortBy(_.getName)
-    if (files.isEmpty)
-      "app_" + s.sparkContext.applicationId
-        .replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-    else {
-      // 64 bits of an MD5 over the metadata signature (a 32-bit hash
-      // keys a mutable shared directory too narrowly — round-18
-      // review). A regeneration that preserves name+size+mtime
-      // exactly still defeats any metadata-only fingerprint; that is
-      // the inherent limit of this signal (a table format's snapshot
-      // id is the production answer), documented here rather than
-      // papered over.
-      val sig = files.map(f => s"${f.getName}:${f.length}:${f.lastModified}")
-        .mkString("|")
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(sig.getBytes("UTF-8"))
-        .take(8).map(b => f"${b & 0xff}%02x").mkString
-    }
-  }
-
-  private def artifactRootFor(d: String, fp: String): String =
+  /** This application's artifact root for the dataset dir `d`. */
+  private def artifactRoot(s: SparkSession, d: String): String =
     sharedRoot + "/graft_ivf_lc_" +
-      d.replaceAll("[^A-Za-z0-9]", "_").toLowerCase + "_" + fp
-
-  private[graft] def artifactRoot(s: SparkSession, d: String): String =
-    artifactRootFor(d, corpusFingerprint(s, d))
+      d.replaceAll("[^A-Za-z0-9]", "_").toLowerCase + "_app_" +
+      s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_").toLowerCase
 
   private def touchHeartbeat(root: String,
                              name: String = "heartbeat"): Unit = try {
@@ -190,22 +130,16 @@ object IvfLifecycle {
     * is sweepable mid-flight by a foreign application — the
     * resolve-side existence re-check protects the NEXT resolve, not
     * an executing job). 1 h covers every measured workload here by
-    * two orders of magnitude; a deployment running longer queries
-    * raises `graft.ivf.sweep.grace.ms` — or commits through a table
-    * format whose snapshot GC has this grace built in, which is the
-    * production answer. */
-  private[graft] def sweepGraceMs: Long =
-    sys.props.get("graft.ivf.sweep.grace.ms").flatMap(p =>
-      scala.util.Try(p.toLong).toOption).getOrElse(3600L * 1000)
+    * two orders of magnitude. */
+  private[graft] val sweepGraceMs: Long = 3600L * 1000
 
-  /** Heartbeat-based sweep of the SHARED root (ADVICE r17 item 1):
+  /** Heartbeat-based sweep of the shared root (ADVICE r17 item 1):
     * an artifact is removable only when its heartbeat — touched by
-    * every resolve, including adoptions and cache hits — is over
-    * [[sweepGraceMs]] stale, so a live concurrent application keeps
-    * its artifact alive by using it; this JVM's own cached roots are
-    * excluded outright. (The victim-side half of the fix is in
-    * [[resolve]]: a cache hit re-verifies the dirs exist and
-    * rebuilds if swept.) */
+    * every resolve, including cache hits — is over [[sweepGraceMs]]
+    * stale, so a live concurrent application keeps its artifact
+    * alive by using it; this JVM's own cached roots are excluded
+    * outright. (The victim-side half of the fix is in [[resolve]]: a
+    * cache hit re-verifies the dirs exist and rebuilds if swept.) */
   private def sweepSharedStale(keep: String): Unit = try {
     val cutoff = System.currentTimeMillis() - sweepGraceMs
     val live = built.values.map(_.root).toSet + keep
@@ -232,185 +166,62 @@ object IvfLifecycle {
       if (f.name == "pgrp") StructField("pgrp", LongType, f.nullable)
       else f))
 
-  /** Build-if-absent, ADOPT-if-valid, then reuse for the life of the
-    * application. Whichever lifecycle key runs first in the first
-    * application against a corpus version pays the one O(N·k) build;
-    * every later key — and every LATER APPLICATION — reads. */
+  /** Build-if-absent, then reuse for the life of the application.
+    * Whichever lifecycle key runs first pays the one O(N·k) build;
+    * every later key reads. */
   def resolve(s: SparkSession, d: String): Shared = synchronized {
     val key = cacheKey(s, d)
     built.get(key) match {
-      // The cache hit must re-verify BOTH liveness (a foreign sweep
-      // may have removed the dirs) and IDENTITY (the corpus may have
-      // been regenerated since — the cached root embeds the old
-      // fingerprint, so serving it would silently answer from the
-      // old corpus; round-18 review). The fingerprint re-check is a
-      // metadata-only directory listing.
-      case Some(sh) if sh.root == artifactRoot(s, d) &&
-                       new java.io.File(sh.baseRoot).exists() &&
+      // A cache hit must re-verify liveness: a foreign sweep may have
+      // removed the dirs.
+      case Some(sh) if new java.io.File(sh.baseRoot).exists() &&
                        new java.io.File(sh.deltaRoot).exists() &&
                        new java.io.File(sh.centsRoot).exists() =>
         touchHeartbeat(sh.root); sh
       case stale =>
-        // Swept under us by a foreign application, regenerated
-        // corpus, or first call: drop the stranded handles and
-        // re-resolve from disk.
+        // Swept under us, or first call: drop the stranded handles
+        // and build.
         if (stale.isDefined) { built.remove(key); builtBucketed.remove(key) }
-        val sh = adoptOrBuild(s, d)
+        Pipelines31.cleanStaleIndexes(s) // per-app twins/overlays
+        val root = artifactRoot(s, d)
+        sweepSharedStale(root)
+        val sh = build(s, d, root)
         built.put(key, sh)
         touchHeartbeat(sh.root)
         sh
     }
   }
 
-  /** Forget this application's in-memory handles (the artifact stays
-    * on disk). Used by Round18Spec to exercise the cross-application
-    * adopt/validate path inside one JVM — the next resolve() must go
-    * through the manifest exactly as a fresh application would. */
-  private[graft] def dropCache(s: SparkSession, d: String): Unit =
-    synchronized {
-      built.remove(cacheKey(s, d))
-      builtBucketed.remove(cacheKey(s, d))
-    }
-
-  private def adoptOrBuild(s: SparkSession, d: String): Shared = {
-    Pipelines31.cleanStaleIndexes(s) // per-app twins/overlays
-    // Fingerprint computed ONCE and the root derived from it (round-18
-    // review: computing it twice opened a window where a corpus
-    // regeneration racing this resolve could commit a manifest whose
-    // fingerprint differs from the one in its own directory name —
-    // an artifact no later lookup could ever adopt).
-    val fp = corpusFingerprint(s, d)
-    val root = artifactRootFor(d, fp)
-    sweepSharedStale(root)
-    tryAdopt(s, d, fp, root).getOrElse(build(s, d, root, fp))
-  }
-
-  private def tryAdopt(s: SparkSession, d: String, fp: String,
-                       root: String): Option[Shared] =
-    readManifest(s, root) match {
-      case Some((ver, mfp, nBase, nDelta, nCents))
-          if ver == FormatVersion && mfp == fp &&
-             validCounts(s, root, nBase, nDelta, nCents) =>
-        System.err.println(
-          s"GRAFT IvfLifecycle($d): ADOPTED prior application's artifact " +
-          s"at $root (validated: format v$ver, fingerprint, 3 segment counts)")
-        Some(shared(s, root, nBase, nDelta))
-      case Some(_) =>
-        System.err.println(
-          s"GRAFT IvfLifecycle($d): REJECTED mismatched artifact at $root " +
-          "(format/fingerprint/count validation failed) — rebuilding")
-        None
-      case None => None
-    }
-
-  private def shared(s: SparkSession, root: String,
-                     nBase: Long, nDelta: Long): Shared = {
-    val baseRoot = s"$root/base"
-    Shared(root, baseRoot, s"$root/delta", s"$root/cents",
-           pinnedSchema(s, baseRoot), nBase, nDelta)
-  }
-
-  /** (formatVersion, fingerprint, nBase, nDelta, nCents), or None if
-    * the artifact has no committed manifest. */
-  private def readManifest(s: SparkSession, root: String)
-      : Option[(Long, String, Long, Long, Long)] = try {
-    // Existence pre-check: a plain parquet read of a missing path
-    // makes Spark log a WARN + stack trace before our catch sees it.
-    if (!new java.io.File(s"$root/manifest").exists()) return None
-    val m = s.read.parquet(s"$root/manifest").head()
-    Some((m.getAs[Long]("format_version"), m.getAs[String]("fingerprint"),
-          m.getAs[Long]("n_base"), m.getAs[Long]("n_delta"),
-          m.getAs[Long]("n_cents")))
-  } catch { case _: Exception => None }
-
-  /** Parquet-metadata-only count checks of all three segments — the
-    * adopt path's cost is these reads, never a rebuild. */
-  private def validCounts(s: SparkSession, root: String, nBase: Long,
-                          nDelta: Long, nCents: Long): Boolean = try {
-    s.read.parquet(s"$root/base").count() == nBase &&
-      s.read.parquet(s"$root/delta").count() == nDelta &&
-      s.read.parquet(s"$root/cents").count() == nCents
-  } catch { case _: Exception => false }
-
-  /** Build into a PRIVATE temp root, then commit by directory RENAME
-    * (round-18 review: building in place under the shared root let a
-    * concurrent application's resolve rmRf an in-progress build, and
-    * interleaved two builders' writes into one directory). The temp
-    * root carries this application's id — no two builders share it —
-    * and keeps the `graft_ivf_lc_` prefix plus a heartbeat touched at
-    * every phase boundary, so the shared sweep's liveness rule covers
-    * it (residual risk: ONE build phase outlasting the 1 h cutoff on
-    * a swept box — a production deployment would commit through a
-    * table format's transaction instead of a filesystem rename). If
-    * the rename loses the race, the winner's artifact is validated
-    * and adopted; this builder's temp is discarded. */
-  private def build(s: SparkSession, d: String, root: String,
-                    fp: String): Shared = {
-    val tmp = root + ".build_" + s.sparkContext.applicationId
-      .replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-    new java.io.File(tmp).mkdirs()
-    touchHeartbeat(tmp)
+  /** Builds the three segments straight into `root`. Every write is
+    * an overwrite, so a rebuild over a partly swept root starts
+    * clean; the heartbeat is touched at each phase boundary so a
+    * foreign sweep's liveness rule covers a build in progress. */
+  private def build(s: SparkSession, d: String, root: String): Shared = {
+    new java.io.File(root).mkdirs()
+    touchHeartbeat(root)
     val e = Tables.embeddings(s, d).select("vec_id", "embedding")
     val base = e.filter(col("vec_id") % 50 =!= 17)
     val batch = e.filter(col("vec_id") % 50 === 17)
     Pipelines31.centroidsOf(base).coalesce(1)
-      .write.mode("overwrite").parquet(s"$tmp/cents")
-    touchHeartbeat(tmp)
-    val sidecar = s.read.parquet(s"$tmp/cents")
+      .write.mode("overwrite").parquet(s"$root/cents")
+    touchHeartbeat(root)
+    val sidecar = s.read.parquet(s"$root/cents")
     def layout(rows: DataFrame): DataFrame =
       Pipelines31.assignCells(s, rows, sidecar)
         .withColumn("pgrp", Pipelines32.pgrpOf(col("cell")))
         .repartitionByRange(col("pgrp"), col("cell"))
         .sortWithinPartitions("cell")
     layout(base).write.mode("overwrite")
-      .partitionBy("pgrp").parquet(s"$tmp/base")
-    touchHeartbeat(tmp)
+      .partitionBy("pgrp").parquet(s"$root/base")
+    touchHeartbeat(root)
     layout(batch).write.mode("overwrite")
-      .partitionBy("pgrp").parquet(s"$tmp/delta")
-    touchHeartbeat(tmp)
-    val schema = pinnedSchema(s, s"$tmp/base")
+      .partitionBy("pgrp").parquet(s"$root/delta")
+    touchHeartbeat(root)
+    val schema = pinnedSchema(s, s"$root/base")
     // Parquet-metadata-only counts; they feed the bucketed twin's
-    // write-time bucket derivation AND the manifest's validation
-    // contract for adopting applications.
-    val nBase = s.read.schema(schema).parquet(s"$tmp/base").count()
-    val nDelta = s.read.schema(schema).parquet(s"$tmp/delta").count()
-    val nCents = sidecar.count()
-    // The manifest is the COMMIT POINT inside the temp root, written
-    // last; the RENAME below publishes the whole artifact atomically.
-    // An adopter finding no manifest treats a root as uncommitted
-    // garbage.
-    import s.implicits._
-    Seq((FormatVersion, fp, nBase, nDelta, nCents))
-      .toDF("format_version", "fingerprint", "n_base", "n_delta", "n_cents")
-      .coalesce(1).write.mode("overwrite").parquet(s"$tmp/manifest")
-    // Publish. A root that appeared while we built is either a
-    // CONCURRENT WINNER (validates → adopt it and discard this
-    // build; the clear-first form silently clobbered a committed
-    // artifact out from under the winner's running queries and made
-    // the rename-failure branch below nearly unreachable — round-18
-    // review) or a stale/rejected/uncommitted occupant (fails
-    // validation → clear it and publish ours).
-    if (new java.io.File(root).exists()) {
-      tryAdopt(s, d, fp, root) match {
-        case Some(winner) =>
-          Pipelines31.rmRf(new java.io.File(tmp))
-          System.err.println(
-            s"GRAFT IvfLifecycle($d): a concurrent application " +
-            s"committed $root first — adopting it, discarding this build")
-          return winner
-        case None => Pipelines31.rmRf(new java.io.File(root))
-      }
-    }
-    if (!new java.io.File(tmp).renameTo(new java.io.File(root))) {
-      // Lost the publish race: a concurrent application committed
-      // first. Adopt the winner if it validates; otherwise give up
-      // loudly rather than serve an unvalidated artifact.
-      Pipelines31.rmRf(new java.io.File(tmp))
-      return tryAdopt(s, d, fp, root).getOrElse(
-        throw new IllegalStateException(
-          s"IvfLifecycle($d): lost the publish race at $root and the " +
-          "winner's artifact failed validation"))
-    }
+    // write-time bucket derivation.
+    val nBase = s.read.schema(schema).parquet(s"$root/base").count()
+    val nDelta = s.read.schema(schema).parquet(s"$root/delta").count()
     Shared(root, s"$root/base", s"$root/delta", s"$root/cents",
            schema, nBase, nDelta)
   }
@@ -440,7 +251,7 @@ object IvfLifecycle {
             try s.sql(s"DROP TABLE IF EXISTS default.`$name`")
             catch { case _: Exception => () }
           }
-          val name = Pipelines31.ident(s, "graft_ivf_index", d)
+          val name = Sinks.ident(s, "graft_ivf_index", d)
           val n = sh.nBase + sh.nDelta
           val nb = Pipelines31.ivfNumBuckets(n)
           // Fixture scale: one writer task per segment keeps file
@@ -529,26 +340,8 @@ object IvfLifecycle {
       .unionAll(segmentAt(s, m.getAs[String]("compact_root"), schema))
   }
 
-  /** Rewrites an artifact's manifest with a bogus fingerprint — the
-    * one copy of the tamper used by the REJECT tests (AdoptProbe's
-    * `corrupt` mode and Round18Spec; round-18 review: the two
-    * hand-copied blocks would silently diverge from the manifest
-    * schema and turn the intended REJECT test into a
-    * manifest-unreadable no-op). */
-  private[graft] def tamperManifestFingerprint(s: SparkSession,
-                                               root: String): Unit = {
-    import s.implicits._
-    val old = s.read.parquet(s"$root/manifest").head()
-    Seq((old.getAs[Long]("format_version"), "deadbeef",
-         old.getAs[Long]("n_base"), old.getAs[Long]("n_delta"),
-         old.getAs[Long]("n_cents")))
-      .toDF("format_version", "fingerprint", "n_base", "n_delta",
-            "n_cents")
-      .coalesce(1).write.mode("overwrite").parquet(s"$root/manifest")
-  }
-
   /** Writes the delete key's compaction manifest — the one copy of
-    * its schema, shared with DeleteProbe. */
+    * its schema, read back by [[compactedViewFromManifest]]. */
   private[graft] def writeCompactionManifest(s: SparkSession, sh: Shared,
       compactRoot: String, affected: Seq[Long],
       manifestRoot: String): Unit = {

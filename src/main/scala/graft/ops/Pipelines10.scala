@@ -126,8 +126,7 @@ object Pipelines10 extends Module {
       // computed exactly once from the single checkpointed tokenize,
       // and the banding reads the old side back from parquet instead
       // of re-deriving it (round 9's second localCheckpoint).
-      val oldSigPath = Sinks.sinkRoot(s) + "/incdedup_oldsig_" +
-        d.replaceAll("[^A-Za-z0-9]", "_")
+      val oldSigPath = Sinks.sinkPath(s, "incdedup_oldsig", d)
       sigOf(oldDocs).write.mode("overwrite").parquet(oldSigPath)
       val oldSig = s.read.parquet(oldSigPath)
       val newSig = sigOf(newDocs)

@@ -180,8 +180,7 @@ object Pipelines13 extends Module {
     // filter lands in PushedFilters (plan-asserted in Round6bSpec);
     // the aggregate proves read-back equivalence.
     "sink_clustered_minmax" -> ((s, d) => {
-      val out = Sinks.sinkRoot(s) + "/events_clustered_" +
-        d.replaceAll("[^A-Za-z0-9]", "_")
+      val out = Sinks.sinkPath(s, "events_clustered", d)
       Tables.events(s, d)
         .repartitionByRange(8, col("user_id"))
         .sortWithinPartitions("user_id", "ts")

@@ -236,8 +236,7 @@ object Pipelines15 extends Module {
     // to prove lossless nesting. Money rides as integer cents — JSON
     // float round-trips are not bit-stable, integers are.
     "source_json_nested" -> ((s, d) => {
-      val out = Sinks.sinkRoot(s) + "/json_nested_" +
-        d.replaceAll("[^A-Za-z0-9]", "_")
+      val out = Sinks.sinkPath(s, "json_nested", d)
       Tables.orders(s, d)
         .select(col("o_custkey"), col("o_orderkey"),
                 expr("cast(round(o_totalprice * 100) as bigint)")
@@ -363,8 +362,7 @@ object Pipelines15 extends Module {
     // hides data loss. The aggregate audits the quarantine: corrupt
     // lines are counted, clean rows keep exact stats.
     "source_json_corrupt_tolerant" -> ((s, d) => {
-      val out = Sinks.sinkRoot(s) + "/json_corrupt_" +
-        d.replaceAll("[^A-Za-z0-9]", "_")
+      val out = Sinks.sinkPath(s, "json_corrupt", d)
       Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("n_chars"))
         .withColumn("line",

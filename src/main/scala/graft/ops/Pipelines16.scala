@@ -38,8 +38,7 @@ object Pipelines16 extends Module {
     // `dynamicpruning` subquery is present in the scan's
     // PartitionFilters; the oracle checks the join result itself.
     "scan_dpp_join" -> ((s, d) => {
-      val out = Sinks.sinkRoot(s) + "/lineitem_by_shipyr_" +
-        d.replaceAll("[^A-Za-z0-9]", "_")
+      val out = Sinks.sinkPath(s, "lineitem_by_shipyr", d)
       Tables.lineitem(s, d)
         .select(col("l_quantity"),
                 year(col("l_shipdate")).as("ship_yr"))
@@ -103,8 +102,7 @@ object Pipelines16 extends Module {
       // set at runtime on `s` is not visible in newSession()'s conf, and
       // sibling keys (scan_dpp_join, scan_schema_evolution) write under
       // the parent-configured root — this key must land beside them.
-      val dimOut = Sinks.sinkRoot(s) + "/skew_dim_" +
-        d.replaceAll("[^A-Za-z0-9]", "_")
+      val dimOut = Sinks.sinkPath(s, "skew_dim", d)
       Tables.orders(s2, d)
         .groupBy(expr("CAST(o_orderkey % 97 AS BIGINT)").as("k"))
         .agg(count(lit(1)).as("n_orders"))
@@ -367,8 +365,7 @@ object Pipelines16 extends Module {
     // rewritten). The aggregate buckets by the evolved column with
     // an explicit label for pre-evolution rows.
     "scan_schema_evolution" -> ((s, d) => {
-      val out = Sinks.sinkRoot(s) + "/orders_evo_" +
-        d.replaceAll("[^A-Za-z0-9]", "_")
+      val out = Sinks.sinkPath(s, "orders_evo", d)
       val o = Tables.orders(s, d)
       o.filter(year(col("o_orderdate")) <= 1997)
         .select("o_orderkey", "o_totalprice")

@@ -142,8 +142,7 @@ object Pipelines19 extends Module {
     // rounds on double→bigint cast where Spark truncates; an explicit
     // round() first makes both exact).
     "scan_nested_prune" -> ((s, d) => {
-      val out = Sinks.sinkRoot(s) + "/orders_nested_" +
-        d.replaceAll("[^A-Za-z0-9]", "_")
+      val out = Sinks.sinkPath(s, "orders_nested", d)
       Tables.orders(s, d)
         .select(col("o_orderkey"),
                 struct(col("o_custkey"), col("o_orderstatus")).as("cust"),

@@ -51,8 +51,7 @@ object Pipelines24 extends Module {
     // the source table, which equals the round-trip iff the written
     // layout is complete and the reader parses every row.
     "source_xml_roundtrip" -> ((s, d) => {
-      val dir = Sinks.sinkRoot(s) + "/xml_docs_" +
-        d.replaceAll("[^A-Za-z0-9]", "_")
+      val dir = Sinks.sinkPath(s, "xml_docs", d)
       Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("source"),
                 length(col("text")).cast("long").as("n_chars"))

@@ -35,8 +35,7 @@ object Pipelines26 extends Module {
     // auditing file count and that `_metadata.file_size` is real.
     // The lakehouse-ops surface: per-file accounting without a manifest.
     "scan_metadata_cols" -> ((s, d) => {
-      val dir = Sinks.sinkRoot(s) + "/events_meta_" +
-        d.replaceAll("[^A-Za-z0-9]", "_")
+      val dir = Sinks.sinkPath(s, "events_meta", d)
       Tables.events(s, d)
         .repartition(col("event_type"))
         .write.mode("overwrite").partitionBy("event_type").parquet(dir)

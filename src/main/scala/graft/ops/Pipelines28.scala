@@ -162,52 +162,6 @@ object Pipelines28 extends Module {
                                  as f)))))))))),
             cast(array() as array<struct<c: bigint, f: bigint>>)))"""
 
-  /** [[marginMaskSet]] widened by the depth-6 combination term — the
-    * "documented floor change" widening, written down when round 15
-    * added depths 4–5 and predicted depth 6 would be needed past
-    * np = 23. The round-18 eighth-decade ladder MEASURED it (and the
-    * budget dial) and found BOTH inert: at np = 20 (160 M vectors)
-    * aggregate recall pinned at 0.667 for budget ×1/×2/×4 over
-    * depth ≤ 5 AND for depth ≤ 6 at ×1/×2, and OrDiag shows why —
-    * the ten missed exact-top-3 pairs are cos 0.60–0.66 CROSS-COPY
-    * neighbors (the order-statistics tail of 160 M iid cosines, not
-    * planted structure) needing 6–11 flips in their BEST table,
-    * while every planted ~0.95-cos twin is found at ≤ 2 flips
-    * (structure recall 10/10). The aggregate floor broke because the
-    * exact-truth SHAPE changed at this N, not because the sketch
-    * degraded — so the declared key deliberately does NOT adopt this
-    * term (it buys C(np,6) enumeration for tail pairs no practical
-    * multiprobe reaches); it stays as the measured negative result,
-    * runnable via TopkProbe's `_d6` pseudo-keys. Cost shape if ever
-    * adopted: C(np,6) extra enumerated structs per (probe, table) —
-    * 38 760 at np = 20, probe-side only, never the corpus side. */
-  private[graft] val marginMaskSetDepth6: String =
-    s"""concat($marginMaskSet,
-         if(np > 15 and r >= 3,
-            flatten(flatten(flatten(flatten(flatten(
-              transform(sequence(0, np - 6), j ->
-                transform(sequence(j + 1, np - 5), k ->
-                  transform(sequence(k + 1, np - 4), l ->
-                    transform(sequence(l + 1, np - 3), m ->
-                      transform(sequence(m + 1, np - 2), n2 ->
-                        transform(sequence(n2 + 1, np - 1), o2 ->
-                          struct(element_at(srt, j + 1).c
-                                   + element_at(srt, k + 1).c
-                                   + element_at(srt, l + 1).c
-                                   + element_at(srt, m + 1).c
-                                   + element_at(srt, n2 + 1).c
-                                   + element_at(srt, o2 + 1).c as c,
-                                 shiftleft(1L, element_at(srt, j + 1).b)
-                                   + shiftleft(1L, element_at(srt, k + 1).b)
-                                   + shiftleft(1L, element_at(srt, l + 1).b)
-                                   + shiftleft(1L, element_at(srt, m + 1).b)
-                                   + shiftleft(1L,
-                                       element_at(srt, n2 + 1).b)
-                                   + shiftleft(1L,
-                                       element_at(srt, o2 + 1).b)
-                                   as f)))))))))))),
-            cast(array() as array<struct<c: bigint, f: bigint>>)))"""
-
   /** The per-probe-per-TABLE mask budget consuming [[marginMaskSet]]:
     * unlimited at np ≤ 15 (the domain is the exact radius ball
     * there); past the pin it is DERIVED from a target per-table
@@ -241,6 +195,13 @@ object Pipelines28 extends Module {
     *     fraction decays again (documented floor change: holding F*
     *     past np = 23 needs depth-6 mask terms, the same mechanical
     *     widening that added depths 4–5 in round 15).
+    *     Round 18 measured that widening (and budget ×2/×4) at
+    *     np = 20, 160 M vectors: aggregate recall stayed at 0.667,
+    *     because the missed exact-top-3 pairs are cos 0.60–0.66
+    *     cross-copy tail neighbors needing 6–11 flips in their best
+    *     table while every planted twin is found at ≤ 2 flips — so
+    *     the domain stops at depth 5 (depth 6 would cost C(np,6)
+    *     structs per probe and table, 38 760 at np = 20).
     *
     * Per-table, NOT pooled across tables: the 20 M ladder measured
     * pooled allocation at 0.633 — the pooled budget drains into
@@ -290,8 +251,7 @@ object Pipelines28 extends Module {
                 when(col("sp").isNotNull && col("tp").isNotNull, "update")
                   .when(col("sp").isNotNull, "insert")
                   .otherwise("keep").as("action"))
-      val root = Sinks.sinkRoot(s) + "/merge_upsert_" +
-        d.replaceAll("[^A-Za-z0-9]", "_")
+      val root = Sinks.sinkPath(s, "merge_upsert", d)
       merged.write.mode("overwrite").parquet(root)
       s.read.parquet(root)
         .groupBy("action")

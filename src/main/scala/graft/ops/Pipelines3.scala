@@ -555,8 +555,7 @@ object Pipelines3 extends Module {
     // oracle-checked against the original — proving the ORC path loses
     // nothing.
     "source_orc_roundtrip" -> ((s, d) => {
-      val out = Sinks.sinkRoot(s) + "/orders_orc_" +
-        d.replaceAll("[^A-Za-z0-9]", "_")
+      val out = Sinks.sinkPath(s, "orders_orc", d)
       Tables.orders(s, d)
         .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
         // One file at fixture scale (write is file-open bound; the

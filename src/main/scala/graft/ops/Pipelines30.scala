@@ -74,39 +74,7 @@ object Pipelines30 extends Module {
     * the full row runs on the candidate grain (≤ 4 rows per true pair),
     * never the corpus grain.
     */
-  private def orRadiusTopk(s: SparkSession, d: String): DataFrame =
-    orRadiusTopkBudgeted(s, d, Pipelines28.marginBudget)
-
-  /** Probe-only budget widening (round 18 — the eighth-decade ladder
-    * point measured the fraction-constant budget at 0.667, one pair
-    * under the 0.70 floor at np = 20, so the "budget is a one-line
-    * dial" claim needed a measured point, not an argument). The
-    * DECLARED key always passes [[Pipelines28.marginBudget]]
-    * verbatim — bit-identical text, bit-identical plan, oracle
-    * untouched; TopkProbe's `llm_sim_topk_lsh_or_bXN` pseudo-keys
-    * pass the same budget scaled ×N (scan-fraction bound scales to
-    * 4·N·2^(np−8)/2^np). */
-  private[graft] def orRadiusTopkBudgetScaled(s: SparkSession, d: String,
-                                              scale: Int): DataFrame =
-    orRadiusTopkBudgeted(s, d,
-      s"""cast(least(cast($scale as bigint) *
-                     ${Pipelines28.marginBudget}, 2147483647) as int)""")
-
-  /** Probe-only DOMAIN widening (round 18): the standard budget over
-    * the depth-≤6 mask domain ([[Pipelines28.marginMaskSetDepth6]])
-    * — same scan-fraction bound, deeper reach. Optionally composed
-    * with the budget scale. */
-  private[graft] def orRadiusTopkDepth6(s: SparkSession, d: String,
-                                        scale: Int = 1): DataFrame =
-    orRadiusTopkBudgeted(s, d,
-      if (scale == 1) Pipelines28.marginBudget
-      else s"""cast(least(cast($scale as bigint) *
-                     ${Pipelines28.marginBudget}, 2147483647) as int)""",
-      Pipelines28.marginMaskSetDepth6)
-
-  private def orRadiusTopkBudgeted(
-      s: SparkSession, d: String, budgetExpr: String,
-      maskSetExpr: String = Pipelines28.marginMaskSet): DataFrame = {
+  private def orRadiusTopk(s: SparkSession, d: String): DataFrame = {
     val nv = Tables.embeddings(s, d)
       .agg(count(lit(1)).as("n_vecs"))
       .select(least(lit(31), greatest(lit(3),
@@ -149,8 +117,8 @@ object Pipelines30 extends Module {
         expr("graft_sign_lsh_margins(embedding, np, t * np)"))
       .withColumn("srt", expr(Pipelines28.marginOrder))
       .withColumn("mk", explode(expr(
-        s"""slice(array_sort($maskSetExpr), 1,
-                  $budgetExpr)""")))
+        s"""slice(array_sort(${Pipelines28.marginMaskSet}), 1,
+                  ${Pipelines28.marginBudget})""")))
       .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
               col("t"), expr("bucket ^ mk.f").as("bucket"))
     val pairs = tb.join(broadcast(probes), Seq("t", "bucket"))

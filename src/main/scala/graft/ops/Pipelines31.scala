@@ -20,12 +20,19 @@ import org.apache.spark.sql.functions._
   */
 object Pipelines31 extends Module {
 
-  /** Catalog-safe table name, unique per Spark application (same
-    * contract as Sinks.ident: two sessions sharing a metastore must
-    * not overwrite each other). */
-  private[graft] def ident(s: SparkSession, base: String, d: String): String =
-    (base + "_" + d + "_" + s.sparkContext.applicationId)
-      .replaceAll("[^A-Za-z0-9]", "_").toLowerCase
+  /** Recursive local-dir delete — the one copy (round 16, review):
+    * shared by the stale-index sweep, the delete key's zero-survivor
+    * guard, and the specs. */
+  private[graft] def rmRf(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(rmRf))
+    f.delete()
+  }
+
+  /** Newest mtime under a tree — the one copy (round 17, review):
+    * shared by the stale-index sweeps and the Round17Spec pins. */
+  private[graft] def newestMtime(f: java.io.File): Long =
+    (f.lastModified() +: Option(f.listFiles()).toSeq.flatten
+      .map(newestMtime)).max
 
   /** Best-effort sweep of PRIOR runs' persisted-index artifacts
     * (ADVICE r14): every application's persisted-index keys leave a
@@ -44,24 +51,8 @@ object Pipelines31 extends Module {
     * newest mtime stays inside the cutoff, and the victim-side
     * fallback — a cache hit whose files were swept anyway rebuilds
     * instead of failing — lives in [[IvfLifecycle.resolveBucketed]].
-    * (The lifecycle SEGMENTS moved out of the per-app roots entirely
-    * in round 18 — they live under [[IvfLifecycle.sharedRoot]] with
-    * their own heartbeat-based sweep and cross-app adoption.) */
-  /** Recursive local-dir delete — the one copy (round 16, review):
-    * shared by the stale-index sweep, the delete key's zero-survivor
-    * guard, and the specs. */
-  private[graft] def rmRf(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmRf))
-    f.delete()
-  }
-
-  /** Newest mtime under a tree — the one copy (round 17, review):
-    * shared by the stale-index sweep, DeleteProbe's immutability
-    * audit, and the Round17Spec pins. */
-  private[graft] def newestMtime(f: java.io.File): Long =
-    (f.lastModified() +: Option(f.listFiles()).toSeq.flatten
-      .map(newestMtime)).max
-
+    * (The lifecycle segments themselves live outside the sink roots
+    * and have their own heartbeat-based sweep in [[IvfLifecycle]].) */
   private[graft] def cleanStaleIndexes(s: SparkSession): Unit = try {
     val root = new java.io.File(Sinks.sinkRoot(s))
     val cutoff = System.currentTimeMillis() - IvfLifecycle.sweepGraceMs

@@ -112,7 +112,7 @@ object Pipelines32 extends Module {
       val sidecar = sh.sidecar(s)
       val full = sh.fullIndex(s)
       val stem = s"${Sinks.sinkRoot(s)}/" +
-        Pipelines31.ident(s, "graft_ivf_index_del", d)
+        Sinks.ident(s, "graft_ivf_index_del", d)
       // ---- DELETE: tombstones located via the sidecar, O(|B|·k). ----
       val batch = Tables.embeddings(s, d).select("vec_id", "embedding")
         .filter(col("vec_id") % 50 === 17)
@@ -155,8 +155,7 @@ object Pipelines32 extends Module {
       // Round 18 (VERDICT r17 task 4): the manifest is PERSISTED
       // beside the COW output — (segment roots, compact root,
       // affected groups) — and phase 'compacted' reads the view FROM
-      // IT, so any later reader (a second application — DeleteProbe
-      // demonstrates one) serves the compacted index from the
+      // IT, so any later reader serves the compacted index from the
       // manifest alone, never re-deriving `affected`.
       IvfLifecycle.writeCompactionManifest(s, sh, stem + "_compact",
         affected.toSeq, stem + "_manifest")

@@ -120,8 +120,7 @@ object Pipelines6 extends Module {
     // line codec loses nothing. The fixture vocabulary is tab-free by
     // construction; a real corpus would escape or length-prefix.
     "source_text_roundtrip" -> ((s, d) => {
-      val dir = Sinks.sinkRoot(s) + "/text_docs_" +
-        d.replaceAll("[^A-Za-z0-9]", "_")
+      val dir = Sinks.sinkPath(s, "text_docs", d)
       Tables.documents(s, d)
         .select(concat_ws("\t", col("doc_id"), col("lang"), col("text"))
                   .as("value"))

@@ -102,8 +102,7 @@ object Pipelines8 extends Module {
     // scanning a lake; this key declares the read side of the
     // sink_partitioned_write layout.
     "scan_partition_pruned" -> ((s, d) => {
-      val out = Sinks.sinkRoot(s) + "/events_pruned_" +
-        d.replaceAll("[^A-Za-z0-9]", "_")
+      val out = Sinks.sinkPath(s, "events_pruned", d)
       Tables.events(s, d)
         .withColumn("day_num",
           (year(col("ts")) * 10000 + month(col("ts")) * 100 +

@@ -29,9 +29,16 @@ object Sinks extends Module {
       sys.props.getOrElse("java.io.tmpdir", "/tmp") + "/graft_sink_" +
         s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_"))
 
+  /** A key's output directory under [[sinkRoot]]: `<name>_<d>` with
+    * every non-alphanumeric character of the dataset dir replaced by
+    * `_` (case kept). */
+  private[graft] def sinkPath(s: SparkSession, name: String,
+                              d: String): String =
+    sinkRoot(s) + "/" + name + "_" + d.replaceAll("[^A-Za-z0-9]", "_")
+
   /** Catalog-safe table name, unique per Spark application so two
     * sessions sharing a metastore don't overwrite each other. */
-  private def ident(s: SparkSession, base: String, d: String): String =
+  private[graft] def ident(s: SparkSession, base: String, d: String): String =
     (base + "_" + d + "_" + s.sparkContext.applicationId)
       .replaceAll("[^A-Za-z0-9]", "_").toLowerCase
 
@@ -42,8 +49,7 @@ object Sinks extends Module {
     // the direct count-per-day iff the partitioned layout is complete
     // and non-overlapping — which is exactly what the oracle checks.
     "sink_partitioned_write" -> ((s, d) => {
-      val out = sinkRoot(s) + "/events_by_day_" +
-        d.replaceAll("[^A-Za-z0-9]", "_")
+      val out = sinkPath(s, "events_by_day", d)
       Tables.events(s, d)
         .withColumn("day_num",
           (year(col("ts")) * 10000 + month(col("ts")) * 100 +
@@ -128,8 +134,7 @@ object Sinks extends Module {
     // oracle-checked against the parquet source. Exercises the text
     // source/sink path end to end.
     "source_csv_roundtrip" -> ((s, d) => {
-      val out = sinkRoot(s) + "/events_csv_" +
-        d.replaceAll("[^A-Za-z0-9]", "_")
+      val out = sinkPath(s, "events_csv", d)
       Tables.events(s, d)
         .select(col("event_id"), col("user_id"), col("event_type"))
         // One file at fixture scale (the write is file-open bound, not
@@ -151,8 +156,7 @@ object Sinks extends Module {
     // JSON-lines round-trip, including a nested JSON string column
     // (props) that must survive re-escaping intact.
     "source_json_roundtrip" -> ((s, d) => {
-      val out = sinkRoot(s) + "/events_json_" +
-        d.replaceAll("[^A-Za-z0-9]", "_")
+      val out = sinkPath(s, "events_json", d)
       Tables.events(s, d)
         .select(col("event_id"), col("event_type"), col("props"))
         .coalesce(1)

@@ -130,8 +130,7 @@ object Streaming extends Module {
     // conventions cannot matter. In update mode each window's last
     // emission is its final count (counts only grow) — max(cnt).
     "stream_watermark_late" -> ((s, d) => {
-      val root = Sinks.sinkRoot(s) + "/wm_late_" +
-        d.replaceAll("[^A-Za-z0-9]", "_")
+      val root = Sinks.sinkPath(s, "wm_late", d)
       // A re-run in the SAME session must not see the previous run's
       // f2: if both files exist when the stream starts they land in
       // one batch and no row is ever late. Wipe the source dir and
@@ -216,8 +215,7 @@ object Streaming extends Module {
     // DuckDB oracle recomputes. Output is the per-user session
     // summary (bounded by |users| at any scale).
     "stream_transform_state" -> ((s, d) => {
-      val root = Sinks.sinkRoot(s) + "/tws_" +
-        d.replaceAll("[^A-Za-z0-9]", "_")
+      val root = Sinks.sinkPath(s, "tws", d)
       val hPath = new org.apache.hadoop.fs.Path(root)
       val fs = hPath.getFileSystem(s.sparkContext.hadoopConfiguration)
       if (fs.exists(hPath)) fs.delete(hPath, true)
@@ -311,8 +309,7 @@ object Streaming extends Module {
     // result state: windows stream straight to parquet files, the
     // bounded-state story a 100 TB drain needs.
     "stream_file_sink_roundtrip" -> ((s, d) => {
-      val root = Sinks.sinkRoot(s) + "/fsink_" +
-        d.replaceAll("[^A-Za-z0-9]", "_")
+      val root = Sinks.sinkPath(s, "fsink", d)
       val hPath = new org.apache.hadoop.fs.Path(root)
       val fs = hPath.getFileSystem(s.sparkContext.hadoopConfiguration)
       if (fs.exists(hPath)) fs.delete(hPath, true)

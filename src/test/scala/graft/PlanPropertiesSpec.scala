@@ -330,8 +330,8 @@ class PlanPropertiesSpec extends AnyFunSuite {
     // histogram is the aggregate below the window, so the plan's
     // Window sits above a HashAggregate, not above the scan.
     val p = plan("llm_ivf_drift_audit")
-    // Round 18: the shared segments live under the cross-application
-    // root (graft_ivf_shared/graft_ivf_lc_<corpus>_<fingerprint>).
+    // The shared segments live under the lifecycle artifact root
+    // (graft_ivf_shared/graft_ivf_lc_<corpus>_app_<appid>).
     assert(p.contains("graft_ivf_lc_"),
       "audit no longer reads the shared lifecycle segments")
     val winIdx = p.indexOf("Window")

@@ -133,7 +133,7 @@ class Round16Spec extends AnyFunSuite {
     assert(rows("compacted").nonEmpty)
     val sh = ops.IvfLifecycle.resolve(spark, sf)
     val stem = s"${ops.Sinks.sinkRoot(spark)}/" +
-      ops.Pipelines31.ident(spark, "graft_ivf_index_del", sf)
+      ops.Sinks.ident(spark, "graft_ivf_index_del", sf)
     val tomb = spark.read.parquet(stem + "_tomb")
     val affected = tomb.select("pgrp").distinct()
       .collect().map(_.getLong(0)).sorted

@@ -4,12 +4,12 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-18 pins — VERDICT r17 tasks 1/2/4 + ADVICE r17 item 2:
+/** Round-18 pins — VERDICT r17 tasks 1/4 + ADVICE r17 item 2:
   * the lifecycle oracles' base-centroid derivation is exact ABOVE the
   * stride switchover (where the retired full-corpus text provably
-  * diverged), cross-application adoption validates-and-reuses (and
-  * rejects tampering), the compaction manifest serves any reader, and
-  * the margin budget clamps instead of wrapping negative at np ≥ 39.
+  * diverged), a swept lifecycle artifact is rebuilt with the same
+  * answers, the compaction manifest serves any reader, and the margin
+  * budget clamps instead of wrapping negative at np ≥ 39.
   */
 class Round18Spec extends AnyFunSuite {
   import TestSpark._
@@ -60,6 +60,7 @@ class Round18Spec extends AnyFunSuite {
                            as float))""").as("embedding"))
       .coalesce(4)
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    var artifact: Option[String] = None
     try {
       val e = spark.read.parquet(s"$dir/embeddings.parquet")
       val base = e.filter(col("vec_id") % 50 =!= 17)
@@ -78,6 +79,7 @@ class Round18Spec extends AnyFunSuite {
 
       // (a) the retired full-corpus derivation diverges HERE.
       val sh = ops.IvfLifecycle.resolve(spark, dir)
+      artifact = Some(sh.root)
       val sidecarIds = sh.sidecar(spark)
         .select("cent_id").collect().map(_.getLong(0)).toSet
       val oldIds = e.filter(col("vec_id") % strideF === 0)
@@ -126,11 +128,9 @@ class Round18Spec extends AnyFunSuite {
     } finally {
       // Drop the synthetic corpus, its shared artifact, and this
       // app's twin so repeated suite runs stay disk-flat.
-      val root = ops.IvfLifecycle.artifactRoot(spark, dir)
-      ops.IvfLifecycle.dropCache(spark, dir)
-      ops.Pipelines31.rmRf(new java.io.File(root))
+      artifact.foreach(r => ops.Pipelines31.rmRf(new java.io.File(r)))
       ops.Pipelines31.rmRf(new java.io.File(dir))
-      val twin = ops.Pipelines31.ident(spark, "graft_ivf_index", dir)
+      val twin = ops.Sinks.ident(spark, "graft_ivf_index", dir)
       try spark.sql(s"DROP TABLE IF EXISTS default.`$twin`")
       catch { case _: Exception => () }
       ops.Pipelines31.rmRf(
@@ -138,53 +138,22 @@ class Round18Spec extends AnyFunSuite {
     }
   }
 
-  test("cross-application adoption: validate-and-reuse, reject tampering") {
-    // VERDICT r17 task 2: the artifact is corpus-fingerprinted and
-    // manifest-committed, so a NEW application adopts it after
-    // validation instead of rebuilding. Simulated here by dropping
-    // the in-memory handle (the only state a real second application
-    // wouldn't have); AdoptProbe demonstrates the same across two
-    // real JVMs for BASELINE.md. Adoption is opt-in (default off so
-    // the bench mains never reuse a prior invocation's artifact —
-    // IvfLifecycle.adoptionEnabled); this test IS the opt-in path.
-    val prevAdopt = sys.props.get("graft.ivf.adopt")
-    System.setProperty("graft.ivf.adopt", "true")
-    try {
+  test("a swept lifecycle artifact is rebuilt with the same answers") {
+    // The cache hit re-verifies that the three segment dirs exist; a
+    // foreign application's stale sweep (or any external cleanup) that
+    // removed one must trigger a rebuild, never a FileNotFound.
+    val before = SparkEntry.queries("llm_ivf_drift_audit")(spark, sf)
+      .collect().toSeq
     val sh1 = ops.IvfLifecycle.resolve(spark, sf)
-    def snap(sh: ops.IvfLifecycle.Shared) =
-      (ops.Pipelines31.newestMtime(new java.io.File(sh.baseRoot)),
-       ops.Pipelines31.newestMtime(new java.io.File(sh.deltaRoot)),
-       ops.Pipelines31.newestMtime(new java.io.File(sh.centsRoot)))
-    val before = snap(sh1)
-
-    ops.IvfLifecycle.dropCache(spark, sf)
+    ops.Pipelines31.rmRf(new java.io.File(sh1.baseRoot))
     val sh2 = ops.IvfLifecycle.resolve(spark, sf)
-    assert(sh2.root === sh1.root && sh2.nBase === sh1.nBase &&
-           sh2.nDelta === sh1.nDelta)
-    assert(snap(sh2) === before,
-      "a valid artifact must be ADOPTED, not rebuilt")
-
-    // Tamper the committed manifest's fingerprint: validation must
-    // REJECT the artifact and rebuild (then re-commit a valid one).
-    ops.IvfLifecycle.tamperManifestFingerprint(spark, sh1.root)
-    ops.IvfLifecycle.dropCache(spark, sf)
-    val sh3 = ops.IvfLifecycle.resolve(spark, sf)
-    assert(snap(sh3) !== before,
-      "a tampered manifest must be REJECTED and the artifact rebuilt")
-    assert(sh3.nBase === sh1.nBase && sh3.nDelta === sh1.nDelta)
-    // And the rebuild re-committed: one more drop-and-resolve adopts.
-    ops.IvfLifecycle.dropCache(spark, sf)
-    assert(snap(ops.IvfLifecycle.resolve(spark, sf)) === snap(sh3),
-      "the rebuilt artifact must be adoptable again")
-    } finally {
-      // Restore the default (adoption off) and drop the handle so
-      // later suites resolve under their app-scoped root again.
-      prevAdopt match {
-        case Some(v) => System.setProperty("graft.ivf.adopt", v)
-        case None    => System.clearProperty("graft.ivf.adopt")
-      }
-      ops.IvfLifecycle.dropCache(spark, sf)
-    }
+    assert(!(sh2 eq sh1), "the stranded handle must not be served")
+    assert(sh2.root === sh1.root)
+    Seq(sh2.baseRoot, sh2.deltaRoot, sh2.centsRoot).foreach(p =>
+      assert(new java.io.File(p).isDirectory, s"$p missing after rebuild"))
+    assert(sh2.nBase === sh1.nBase && sh2.nDelta === sh1.nDelta)
+    assert(SparkEntry.queries("llm_ivf_drift_audit")(spark, sf)
+      .collect().toSeq === before)
   }
 
   test("compaction manifest serves the compacted view to any reader") {
@@ -197,7 +166,7 @@ class Round18Spec extends AnyFunSuite {
     assert(SparkEntry.queries("llm_sim_topk_ivf_delete")(spark, sf)
       .count() > 0L)
     val stem = s"${ops.Sinks.sinkRoot(spark)}/" +
-      ops.Pipelines31.ident(spark, "graft_ivf_index_del", sf)
+      ops.Sinks.ident(spark, "graft_ivf_index_del", sf)
     val view = ops.IvfLifecycle
       .compactedViewFromManifest(spark, stem + "_manifest")
     val sh = ops.IvfLifecycle.resolve(spark, sf)
@@ -207,25 +176,6 @@ class Round18Spec extends AnyFunSuite {
       "a tombstoned id survived in the manifest-served view")
     assert(view.schema("pgrp").dataType ===
       org.apache.spark.sql.types.LongType)
-  }
-
-  test("probe-only OR-search dials are identical to the declared key " +
-       "below the regime step") {
-    // Round-18 eighth-decade instrumentation: TopkProbe's _bxN /
-    // _d6 pseudo-keys widen the margin budget / mask domain WITHOUT
-    // touching the declared plan. Below np = 15 the budget is
-    // already unlimited and the depth-6 term is gated off, so all
-    // three variants must return byte-identical rows — this pin
-    // keeps a refactor of the shared builder from silently changing
-    // the declared key via a default-parameter slip.
-    val declared = SparkEntry.queries("llm_sim_topk_lsh_or")(spark, sf)
-      .collect().toSeq
-    val bx2 = ops.Pipelines30.orRadiusTopkBudgetScaled(spark, sf, 2)
-      .collect().toSeq
-    val d6 = ops.Pipelines30.orRadiusTopkDepth6(spark, sf)
-      .collect().toSeq
-    assert(bx2 === declared, "budget x2 must be inert at fixture np")
-    assert(d6 === declared, "the depth-6 domain must be inert at fixture np")
   }
 
   // ---- round-18 OPTIMIZATION pins (results must be plan-invariant) --
