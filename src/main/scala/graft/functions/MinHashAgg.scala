@@ -12,8 +12,10 @@ import org.apache.spark.sql.expressions.Aggregator
   * expressions; this class is the reusable aggregating form for typed
   * pipelines (`ds.groupByKey(...).agg(MinHashAgg.toColumn)`).
   *
-  * The hash chain matches LlmScale exactly (md5-prefix base hash,
-  * affine maps mod 2^31-1), so signatures from either path agree.
+  * `A`, `B` and `P` are the one MinHash coefficient table:
+  * `ops.Hashing.signature` builds the same chain in SQL expressions
+  * (md5-prefix base hash, affine maps mod 2^31-1), so signatures from
+  * either path agree.
   */
 object MinHashAgg extends Aggregator[String, Array[Long], Array[Long]] {
   val P = 2147483647L
@@ -25,7 +27,7 @@ object MinHashAgg extends Aggregator[String, Array[Long], Array[Long]] {
   val K: Int = A.length
 
   /** 32-bit base hash: first 8 hex chars of md5 — identical to the
-    * SQL `conv(substring(md5(tok),1,8),16,10)` used in LlmScale. */
+    * SQL `ops.Hashing.md5Prefix("tok")`. */
   def baseHash(token: String): Long = {
     val md = java.security.MessageDigest.getInstance("MD5")
     val d = md.digest(token.getBytes("UTF-8"))

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -16,14 +15,6 @@ import org.apache.spark.sql.functions._
   * scale path lives in `graft.functions.MinHash` (Phase 4).
   */
 object LlmPipeline extends Module {
-
-  /** Cosine via the codegen'd custom Expression
-    * (graft.functions.CosineSimilarity): one fused loop per row inside
-    * whole-stage codegen, arithmetic bit-identical to the sequential
-    * double-promoted HOF formulation mirrored by the DuckDB oracles. */
-  private def cosine(s: SparkSession, a: String, b: String): Column = {
-    expr(s"graft_cosine_sim($a, $b)")
-  }
 
   def queries: Map[String, Q] = Map(
     "llm_dedup_exact" -> ((s, d) =>
@@ -43,7 +34,7 @@ object LlmPipeline extends Module {
       // ordering is identical across engines.
       val pairs = e.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
         .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-                (round(cosine(s, "pe", "embedding"), 4) + 0.0).as("cos_sim"))
+                (round(expr("graft_cosine_sim(pe, embedding)"), 4) + 0.0).as("cos_sim"))
       val w = Window.partitionBy("probe_id")
         .orderBy(desc("cos_sim"), asc("neighbor_id"))
       pairs.withColumn("rnk", row_number().over(w).cast("long"))
@@ -85,9 +76,7 @@ object LlmPipeline extends Module {
       // of generic string-array set ops. |A∪B| = |A|+|B|-|A∩B|.
       val toks = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"),
-                array_sort(array_distinct(
-                  transform(split(col("text"), " "), t => xxhash64(t))))
-                  .as("th"))
+                Hashing.tokenHashSet(split(col("text"), " ")).as("th"))
         .withColumn("n", size(col("th")))
       val a = toks.as("a")
       val b = toks.as("b")
@@ -146,7 +135,7 @@ object LlmPipeline extends Module {
       // the one-pass shape keeps that a single uniform-key shuffle.
       val tagged = a.join(b, col("a_id") < col("b_id"))
         .select(col("a_label"), col("b_label"),
-                cosine(s, "a_emb", "b_emb").as("cos"))
+                expr("graft_cosine_sim(a_emb, b_emb)").as("cos"))
         .select(explode(
           when(col("a_label") === col("b_label"),
                array(struct(col("a_label").as("label"),

@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   * embedding near-dup, bucketed ANN, language-ID, quality scoring,
   * token counting, fingerprinting, multimodal metadata.
   *
-  * Everything is oracle-checked: the hash functions are built from
-  * md5-hex arithmetic that both engines compute identically
+  * Everything is oracle-checked: the hash functions (`Hashing`) are
+  * built from md5-hex arithmetic that both engines compute identically
   * (Spark `conv(substring(md5(x),1,8),16,10)` ≡ DuckDB
   * `CAST('0x'||substring(md5(x),1,8) AS BIGINT)`), so even the LSH
   * banding pipeline produces bit-identical candidates on both sides.
@@ -20,24 +20,6 @@ import org.apache.spark.sql.functions._
   * quadratic in the corpus; only blocked/bucketed pairs are scored.
   */
 object LlmScale extends Module {
-
-  /** 2^31-1; MinHash modulus. a*h stays < 2^52 (h is 32-bit). */
-  private val P = 2147483647L
-  private val A = Seq(100003L, 122251L, 135637L, 161423L, 173431L, 188677L,
-                      199831L, 224737L, 350377L, 411637L, 467237L, 524287L,
-                      600011L, 700001L, 800011L, 900001L)
-  private val B = Seq(7L, 977L, 1847L, 2741L, 3581L, 4421L, 5281L, 6143L,
-                      7001L, 7919L, 8887L, 9733L, 10657L, 11677L, 12569L,
-                      13457L)
-
-  /** 32-bit token hash from the md5 hex prefix — cross-engine stable. */
-  private val hvExpr = "cast(conv(substring(md5(cast(tok as binary)),1,8),16,10) as bigint)"
-
-  /** Codegen'd cosine (graft.functions.CosineSimilarity) — same
-    * sequential double arithmetic the oracles mirror. */
-  private def cosine(s: SparkSession, a: String, b: String): Column = {
-    expr(s"graft_cosine_sim($a, $b)")
-  }
 
   /** Sign-LSH bucket id over `nPlanes` hash-derived ±1 hyperplanes
     * (graft.functions.SignLsh — round 12; previously the signs of the
@@ -62,14 +44,9 @@ object LlmScale extends Module {
     * hub-free. */
   private def minhashLsh(s: SparkSession, d: String,
                          gated: Boolean): DataFrame = {
-      val toks = Tables.documents(s, d)
+      val sig = Hashing.signature(Tables.documents(s, d)
         .select(col("doc_id"),
-                explode(array_distinct(split(col("text"), " "))).as("tok"))
-        .withColumn("hv", expr(hvExpr))
-      val sig = toks.groupBy("doc_id")
-        .agg(min((col("hv") * A(0) + B(0)) % P).as("m0"),
-             (1 until 16).map(i =>
-               min((col("hv") * A(i) + B(i)) % P).as(s"m$i")): _*)
+                explode(array_distinct(split(col("text"), " "))).as("tok")))
         // Materialized once (N×17 longs): both sides of the salted
         // candidate join derive from this — lazily each side would
         // re-run the corpus explode+hash+16-min pipeline.
@@ -98,42 +75,18 @@ object LlmScale extends Module {
       // measured why: on a 10× hub-cluster corpus the ungated pair
       // join emits 461 M pairs / 513 s, quadratic in cluster size,
       // while the pairless degree audit sees the same hubs in 3 s).
-      // Candidate degree per doc WITHOUT materializing pairs, by
-      // inclusion–exclusion over the 15 non-empty band subsets:
-      // |match on ≥1 band| = Σ_S (−1)^{|S|+1}·(docs equal on all of
-      // S) − 1 (self). Docs with degree ≥ 150 (template/boilerplate
+      // Candidate degree per doc WITHOUT materializing pairs
+      // (Hashing.degree, here over the four band keys). Docs with
+      // degree ≥ Hashing.HubDegree (template/boilerplate
       // mega-clusters in a real corpus) are quarantined: emitted as a
       // labeled side output instead of entering the pair join, so the
-      // quadratic term is confined to rows nobody pair-scans.
-      val subsetKeys = (1 until 16).map { mask =>
-        array((0 until 4).filter(b => (mask & (1 << b)) != 0)
-          .map(b => col(s"k$b")): _*)
-      }
-      // Round 18 (opt, guide §2.2/§3.1): the subset counts ride a
-      // (sid, key) count AGGREGATE joined back onto the exploded
-      // stream (shuffled-hash, build side = the 1-row-per-key count
-      // table) instead of a count-over-window. The window form paid a
-      // full per-partition SORT of the 15·N exploded rows and
-      // BUFFERED each (sid, key) group in WindowExec — and a hub
-      // cluster of H docs makes 15 unsplittable H-row groups, which
-      // no partition count can break. The aggregate counts in O(1)
-      // per group (hot keys collapse map-side) and the join streams
-      // the probe side; DegreeProbe A/B at 600 k docs with a 100 k
-      // hub: 2.73 s window vs 2.14 s agg+join (mins of 6 reps), 0
-      // degree mismatches. Both explode consumers re-derive from the
-      // sigK checkpoint, so no extra corpus pass.
-      val degExploded = sigK.select(col("doc_id"),
-        posexplode(array(subsetKeys: _*)).as(Seq("sid", "key")))
-      val degCnt = degExploded.groupBy("sid", "key")
-        .agg(count(lit(1)).as("c"))
-      val deg = degExploded
-        .join(degCnt.hint("shuffle_hash"), Seq("sid", "key"))
-        .groupBy("doc_id").agg(
-          (sum(when(expr("bit_count(sid + 1) % 2 = 1"), col("c"))
-                 .otherwise(-col("c"))) - lit(1)).as("degree"))
+      // quadratic term is confined to rows nobody pair-scans. Both
+      // degree-pass consumers re-derive from the sigK checkpoint, so
+      // no extra corpus pass.
+      val deg = Hashing.degree(sigK, Seq("k0", "k1", "k2", "k3").map(Seq(_)))
       val hubs =
         if (gated)
-          deg.filter(col("degree") >= 150).select("doc_id")
+          deg.filter(col("degree") >= Hashing.HubDegree).select("doc_id")
             .localCheckpoint() // feeds the gate AND the side output
         else sigK.select("doc_id").limit(0)
       val bandSrc = if (gated) sigK.join(hubs, Seq("doc_id"), "left_anti")
@@ -162,18 +115,14 @@ object LlmScale extends Module {
           col("x.band_key") === col("y.band_key") &&
           col("x.salt") === col("y.salt") &&
           col("x.doc_id") < col("y.doc_id") &&
-          (col("x.band_idx") < 1 || col("x.k0") =!= col("y.k0")) &&
-          (col("x.band_idx") < 2 || col("x.k1") =!= col("y.k1")) &&
-          (col("x.band_idx") < 3 || col("x.k2") =!= col("y.k2")))
+          Hashing.firstCollision(4))
         .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"))
       // Verify stage: hashed sorted token arrays + codegen'd merge
       // walk (see llm_dedup_near) — candidates can be millions of
       // pairs on a high-similarity corpus.
       val tsets = Tables.documents(s, d)
         .select(col("doc_id"),
-                array_sort(array_distinct(
-                  transform(split(col("text"), " "), t => xxhash64(t))))
-                  .as("th"))
+                Hashing.tokenHashSet(split(col("text"), " ")).as("th"))
         .withColumn("n", size(col("th")))
         // Materialized once: feeds both verify-join sides (see sig).
         .localCheckpoint()
@@ -291,18 +240,13 @@ object LlmScale extends Module {
       // an interpreted O(n²)-compares scan. The merge-walk side below
       // still dedups — on hashed longs, where array_distinct takes the
       // primitive fast path.
-      val sig = Tables.documents(s, d)
+      val sig = Hashing.signature(Tables.documents(s, d)
         .select(col("doc_id"), split(col("text"), " ").as("t"))
         .select(col("doc_id"), explode(expr(
           """transform(sequence(1, size(t) - 2),
                i -> concat_ws(' ', element_at(t, i),
                               element_at(t, i + 1),
-                              element_at(t, i + 2)))""")).as("tok"))
-        .withColumn("hv", expr(hvExpr))
-        .groupBy("doc_id")
-        .agg(min((col("hv") * A(0) + B(0)) % P).as("m0"),
-             (1 until 16).map(i =>
-               min((col("hv") * A(i) + B(i)) % P).as(s"m$i")): _*)
+                              element_at(t, i + 2)))""")).as("tok")))
         // Materialized once (N×17 longs): the candidate self-join
         // otherwise re-runs the explode+hash+16-min pipeline for its
         // broadcast side — measured as most of this key's cost at
@@ -324,9 +268,7 @@ object LlmScale extends Module {
           col("x.band_idx") === col("y.band_idx") &&
           col("x.band_key") === col("y.band_key") &&
           col("x.doc_id") < col("y.doc_id") &&
-          (1 until 8).map(j =>
-            col("x.band_idx") < j || col(s"x.k${j - 1}") =!= col(s"y.k${j - 1}"))
-            .reduce(_ && _))
+          Hashing.firstCollision(8))
         .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"))
       // Round 18 (opt, guide §4.4): hand-written length prune in the
       // join, ONE non-pushable walk in the projection, threshold as a
@@ -524,7 +466,7 @@ object LlmScale extends Module {
       Tables.documents(s, d)
         .select(col("doc_id"),
                 explode(array_distinct(split(col("text"), " "))).as("tok"))
-        .withColumn("hv", expr(hvExpr))
+        .withColumn("hv", expr(Hashing.md5Prefix("tok")))
         .groupBy("doc_id")
         .agg(balCols.head, balCols.tail: _*)
         .select(col("doc_id"),
@@ -561,7 +503,7 @@ object LlmScale extends Module {
         .filter(col("vec_id") =!= col("probe_id"))
         .select(col("probe_id"), col("vec_id").as("neighbor_id"),
                 col("bucket"),
-                (round(cosine(s, "pe", "embedding"), 4) + 0.0).as("cos_sim"))
+                (round(expr("graft_cosine_sim(pe, embedding)"), 4) + 0.0).as("cos_sim"))
       val w = Window.partitionBy("probe_id")
         .orderBy(desc("cos_sim"), asc("neighbor_id"))
       pairs.withColumn("rnk", row_number().over(w).cast("long"))

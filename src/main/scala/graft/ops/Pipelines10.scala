@@ -75,15 +75,6 @@ object Pipelines10 extends Module {
     // exclude exact dups so the two classes partition the dropped
     // set; kept = docs − exact − near.
     "llm_incremental_dedup" -> ((s, d) => {
-      val P = 2147483647L
-      val A = Seq(100003L, 122251L, 135637L, 161423L, 173431L, 188677L,
-                  199831L, 224737L, 350377L, 411637L, 467237L, 524287L,
-                  600011L, 700001L, 800011L, 900001L)
-      val B = Seq(7L, 977L, 1847L, 2741L, 3581L, 4421L, 5281L, 6143L,
-                  7001L, 7919L, 8887L, 9733L, 10657L, 11677L, 12569L,
-                  13457L)
-      val hvExpr =
-        "cast(conv(substring(md5(cast(tok as binary)),1,8),16,10) as bigint)"
       // ONE tokenize pass: distinct raw tokens are computed once and
       // feed BOTH the xxhash64 token-set (merge-walk confirm) and the
       // md5 MinHash signatures — round 9 tokenized the full text
@@ -96,8 +87,7 @@ object Pipelines10 extends Module {
         .withColumn("h", md5(col("text").cast("binary")))
         .withColumn("toks", array_distinct(split(col("text"), " ")))
         .withColumn("th",
-          array_sort(array_distinct(
-            transform(col("toks"), t => xxhash64(t)))))
+          Hashing.tokenHashSet(col("toks")))
         .withColumn("n", size(col("th")))
         .select("doc_id", "source", "src_num", "h", "toks", "th", "n")
         .localCheckpoint()
@@ -112,13 +102,8 @@ object Pipelines10 extends Module {
       // llm_dedup_minhash_lsh) between new and old, confirmed J >= 0.5
       // in integer form; a new doc is near-dup if ANY old partner
       // confirms.
-      def sigOf(side: DataFrame): DataFrame = side
-        .select(col("doc_id"), explode(col("toks")).as("tok"))
-        .withColumn("hv", expr(hvExpr))
-        .groupBy("doc_id")
-        .agg(min((col("hv") * A(0) + B(0)) % P).as("m0"),
-             (1 until 16).map(i =>
-               min((col("hv") * A(i) + B(i)) % P).as(s"m$i")): _*)
+      def sigOf(side: DataFrame): DataFrame = Hashing.signature(side
+        .select(col("doc_id"), explode(col("toks")).as("tok")))
       // The old corpus' signatures are PERSISTED (the key's own 100 TB
       // story: at scale they live beside the corpus and never
       // recompute from text). Materializing them to the sink root
@@ -134,21 +119,12 @@ object Pipelines10 extends Module {
       // classification must match the oracle's raw-value banding
       // exactly; the 8-byte hashed key remains the production-scale
       // knob documented at llm_dedup_minhash_lsh.
-      def banded(df: DataFrame): DataFrame = df.selectExpr(
-        Seq("doc_id") ++ (0 until 4).map(i => s"array(" + Seq(
-          "m0,m1,m2,m3", "m4,m5,m6,m7", "m8,m9,m10,m11",
-          "m12,m13,m14,m15")(i) + s") as k$i") :+
-          "stack(4, 0, array(m0,m1,m2,m3), 1, array(m4,m5,m6,m7), " +
-          "2, array(m8,m9,m10,m11), 3, array(m12,m13,m14,m15)) " +
-          "as (band_idx, band_key)": _*)
-      val newBands = banded(newSig)
-      val oldBands = banded(oldSig)
+      val newBands = Hashing.rawBands(newSig)
+      val oldBands = Hashing.rawBands(oldSig)
       val candNearIds = newBands.as("x").join(oldBands.as("y"),
           col("x.band_idx") === col("y.band_idx") &&
           col("x.band_key") === col("y.band_key") &&
-          (col("x.band_idx") < 1 || col("x.k0") =!= col("y.k0")) &&
-          (col("x.band_idx") < 2 || col("x.k1") =!= col("y.k1")) &&
-          (col("x.band_idx") < 3 || col("x.k2") =!= col("y.k2")))
+          Hashing.firstCollision(4))
         .select(col("x.doc_id").as("doc_id"), col("y.doc_id").as("old_id"))
       val nearIds = candNearIds
         .join(newDocs.select(col("doc_id"), col("th").as("tn"),

@@ -157,7 +157,7 @@ object Pipelines13 extends Module {
     "llm_split_train_val" -> ((s, d) =>
       Tables.documents(s, d)
         .withColumn("bucket", expr(
-          "cast(conv(substring(md5(cast(cast(doc_id as string) as binary)), 1, 8), 16, 10) as bigint) % 100"))
+          Hashing.md5Prefix("cast(doc_id as string)") + " % 100"))
         .withColumn("split",
           when(col("bucket") < 90, "train")
             .when(col("bucket") < 95, "val").otherwise("test"))

@@ -160,61 +160,15 @@ object Pipelines17 extends Module {
     // (including multi-band collisions, which a naive Σ(|bucket|−1)
     // would double-count) and scales as 15 shuffles of N rows.
     "llm_lsh_degree_hist" -> ((s, d) => {
-      val P = 2147483647L
-      val A = Seq(100003L, 122251L, 135637L, 161423L, 173431L, 188677L,
-                  199831L, 224737L, 350377L, 411637L, 467237L, 524287L,
-                  600011L, 700001L, 800011L, 900001L)
-      val B = Seq(7L, 977L, 1847L, 2741L, 3581L, 4421L, 5281L, 6143L,
-                  7001L, 7919L, 8887L, 9733L, 10657L, 11677L, 12569L,
-                  13457L)
-      val hvExpr =
-        "cast(conv(substring(md5(cast(tok as binary)),1,8),16,10) as bigint)"
-      val sig = Tables.documents(s, d)
+      val sig = Hashing.signature(Tables.documents(s, d)
         .select(col("doc_id"),
-                explode(array_distinct(split(col("text"), " "))).as("tok"))
-        .withColumn("hv", expr(hvExpr))
-        .groupBy("doc_id")
-        .agg(min((col("hv") * A(0) + B(0)) % P).as("m0"),
-             (1 until 16).map(i =>
-               min((col("hv") * A(i) + B(i)) % P).as(s"m$i")): _*)
+                explode(array_distinct(split(col("text"), " "))).as("tok")))
         // Materialized once (N×17 longs, round 18): the count
-        // aggregate and the join-back below both consume the exploded
-        // subset stream — lazily each would re-run the corpus
-        // explode+hash+16-min pipeline.
+        // aggregate and the join-back of the degree pass both consume
+        // the exploded subset stream — lazily each would re-run the
+        // corpus explode+hash+16-min pipeline.
         .localCheckpoint()
-      val bandCols = Seq(
-        Seq("m0", "m1", "m2", "m3"), Seq("m4", "m5", "m6", "m7"),
-        Seq("m8", "m9", "m10", "m11"), Seq("m12", "m13", "m14", "m15"))
-      // Each doc explodes into 15 (subset_id, key) rows — key is the
-      // concatenated minhash values of the bands in subset mask
-      // subset_id+1 — so ONE (subset_id, key) count aggregate
-      // computes every c_S in a single shuffle (15 separate passes
-      // would pay 15 sequential exchange barriers), a shuffled-hash
-      // join-back attaches each doc's own c_S, and one groupBy folds
-      // the signed counts into the per-doc inclusion–exclusion sum.
-      // bit_count(mask) odd → +c_S, even → −c_S. Round 18 (guide
-      // §2.2/§3.1): the join-back form replaced a count-over-window —
-      // the window paid a full per-partition sort of the 15·N rows
-      // and buffered each (sid, key) group, and a hub cluster of H
-      // docs makes 15 unsplittable H-row groups no partition count
-      // can break; the aggregate counts in O(1) per group (hot keys
-      // collapse map-side) and the join streams. DegreeProbe A/B at
-      // 600 k docs / 100 k hub: 2.73 s window vs 2.14 s agg+join
-      // (mins of 6 reps), 0 degree mismatches.
-      val subsetKeys = (1 until 16).map { mask =>
-        val ms = (0 until 4).filter(b => (mask & (1 << b)) != 0)
-          .flatMap(bandCols)
-        array(ms.map(col): _*)
-      }
-      val exploded = sig.select(col("doc_id"),
-        posexplode(array(subsetKeys: _*)).as(Seq("sid", "key")))
-      val degCnt = exploded.groupBy("sid", "key")
-        .agg(count(lit(1)).as("c"))
-      val deg = exploded
-        .join(degCnt.hint("shuffle_hash"), Seq("sid", "key"))
-        .groupBy("doc_id").agg(
-        (sum(when(expr("bit_count(sid + 1) % 2 = 1"), col("c"))
-               .otherwise(-col("c"))) - lit(1)).as("degree"))
+      val deg = Hashing.degree(sig, Hashing.bandCols)
       // Outer join keeps a degree-0 row for a doc with no tokens at
       // all (absent from sig); every tokenized doc is already exact
       // in `deg`, including isolated ones (all c_S = 1 → degree 0).

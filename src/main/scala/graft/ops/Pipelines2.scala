@@ -17,11 +17,6 @@ import org.apache.spark.sql.functions._
   */
 object Pipelines2 extends Module {
 
-  /** Cross-engine-stable 32-bit hash of a string expression (md5 hex
-    * prefix — same recipe as LlmScale.hvExpr). */
-  private def hv32(sqlExpr: String): String =
-    s"cast(conv(substring(md5(cast($sqlExpr as binary)),1,8),16,10) as bigint)"
-
   def queries: Map[String, Q] = Map(
     // Interval self-join: for every event, how many events by the same
     // user land in the following 5 minutes. The range predicate is
@@ -65,7 +60,7 @@ object Pipelines2 extends Module {
         .partitionBy("lang").orderBy("hv", "doc_id")
       val wc = org.apache.spark.sql.expressions.Window.partitionBy("lang")
       Tables.documents(s, d)
-        .withColumn("hv", expr(hv32("cast(doc_id as string)")))
+        .withColumn("hv", expr(Hashing.md5Prefix("cast(doc_id as string)")))
         .withColumn("rk", row_number().over(w))
         .withColumn("n", count(lit(1)).over(wc))
         .filter(col("rk") * 5 <= col("n"))
@@ -84,9 +79,7 @@ object Pipelines2 extends Module {
     "llm_dedup_cluster" -> ((s, d) => {
       val toks = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"),
-                array_sort(array_distinct(
-                  transform(split(col("text"), " "), t => xxhash64(t))))
-                  .as("th"))
+                Hashing.tokenHashSet(split(col("text"), " ")).as("th"))
         .withColumn("n", size(col("th")))
         // Materialized once (N rows of hashed-token arrays): both
         // sides of the blocked edge join derive from this; lazily the
@@ -145,9 +138,7 @@ object Pipelines2 extends Module {
     "llm_dedup_cc" -> ((s, d) => {
       val toks = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"),
-                array_sort(array_distinct(
-                  transform(split(col("text"), " "), t => xxhash64(t))))
-                  .as("th"))
+                Hashing.tokenHashSet(split(col("text"), " ")).as("th"))
         .withColumn("n", size(col("th")))
         // Materialized once (N rows of hashed-token arrays): both
         // sides of the blocked edge join derive from this; lazily the

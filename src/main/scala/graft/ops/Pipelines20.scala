@@ -27,9 +27,7 @@ object Pipelines20 extends Module {
     "llm_doc_containment" -> ((s, d) => {
       val toks = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"),
-                array_sort(array_distinct(
-                  transform(split(col("text"), " "), t => xxhash64(t))))
-                  .as("th"))
+                Hashing.tokenHashSet(split(col("text"), " ")).as("th"))
         .withColumn("n", size(col("th")))
         .localCheckpoint()
       val csalt = 4

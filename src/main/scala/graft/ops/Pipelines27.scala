@@ -54,8 +54,7 @@ object Pipelines27 extends Module {
           """transform(sequence(1, size(t) - 2),
                i -> concat_ws(' ', element_at(t, i), element_at(t, i + 1),
                               element_at(t, i + 2)))""")).as("sh"))
-        .withColumn("th", array_sort(array_distinct(
-          transform(col("sh"), g => xxhash64(g)))))
+        .withColumn("th", Hashing.tokenHashSet(col("sh")))
         .withColumn("n", size(col("th")).cast("long"))
         .localCheckpoint() // feeds df agg, prefix explode, both confirm sides
       val shDf = docs.select(explode(col("sh")).as("g"))
@@ -269,65 +268,28 @@ object Pipelines27 extends Module {
     // audit: hubs quarantined, docs kept, candidate and confirmed
     // pair counts among the kept.
     "llm_dedup_hub_quarantine" -> ((s, d) => {
-      val P = 2147483647L
-      val A = Seq(100003L, 122251L, 135637L, 161423L, 173431L, 188677L,
-                  199831L, 224737L, 350377L, 411637L, 467237L, 524287L,
-                  600011L, 700001L, 800011L, 900001L)
-      val B = Seq(7L, 977L, 1847L, 2741L, 3581L, 4421L, 5281L, 6143L,
-                  7001L, 7919L, 8887L, 9733L, 10657L, 11677L, 12569L,
-                  13457L)
-      val hvExpr =
-        "cast(conv(substring(md5(cast(tok as binary)),1,8),16,10) as bigint)"
       val docs = Tables.documents(s, d)
         .withColumn("toks", array_distinct(split(col("text"), " ")))
-        .withColumn("th", array_sort(array_distinct(
-          transform(col("toks"), t => xxhash64(t)))))
+        .withColumn("th", Hashing.tokenHashSet(col("toks")))
         .withColumn("n", size(col("th")).cast("long"))
         .select("doc_id", "toks", "th", "n")
         .localCheckpoint()
-      val sig = docs
-        .select(col("doc_id"), explode(col("toks")).as("tok"))
-        .withColumn("hv", expr(hvExpr))
-        .groupBy("doc_id")
-        .agg(min((col("hv") * A(0) + B(0)) % P).as("m0"),
-             (1 until 16).map(i =>
-               min((col("hv") * A(i) + B(i)) % P).as(s"m$i")): _*)
+      val sig = Hashing.signature(docs
+        .select(col("doc_id"), explode(col("toks")).as("tok")))
         .localCheckpoint() // feeds the degree pass AND both band sides
-      val bandCols = Seq(
-        Seq("m0", "m1", "m2", "m3"), Seq("m4", "m5", "m6", "m7"),
-        Seq("m8", "m9", "m10", "m11"), Seq("m12", "m13", "m14", "m15"))
-      // Stage 1: pairless degree (same construction as
-      // llm_lsh_degree_hist).
-      val subsetKeys = (1 until 16).map { mask =>
-        array((0 until 4).filter(b => (mask & (1 << b)) != 0)
-          .flatMap(bandCols).map(col): _*)
-      }
-      val exploded = sig.select(col("doc_id"),
-        posexplode(array(subsetKeys: _*)).as(Seq("sid", "key")))
-      // Round 18 (opt, guide §2.2/§3.1 — same re-plan as minhashLsh's
-      // degree pass, measured there by DegreeProbe): (sid, key) count
-      // aggregate + shuffled-hash join-back replaces the
-      // count-over-window, removing the 15·N-row sort and WindowExec's
-      // buffering of unsplittable hub groups; both explode consumers
-      // re-derive from the sig checkpoint.
-      val degCnt = exploded.groupBy("sid", "key")
-        .agg(count(lit(1)).as("c"))
-      val deg = exploded
-        .join(degCnt.hint("shuffle_hash"), Seq("sid", "key"))
-        .groupBy("doc_id").agg(
-          (sum(when(expr("bit_count(sid + 1) % 2 = 1"), col("c"))
-                 .otherwise(-col("c"))) - lit(1)).as("degree"))
+      // Stage 1: pairless degree (same pass as llm_lsh_degree_hist).
+      val deg = Hashing.degree(sig, Hashing.bandCols)
       // Stage 2: quarantine. Materialized once (hub ids only, round
       // 18 — the §7 diamond pattern, and what the minhashLsh sibling
       // already did): hubs feeds the band-side gate, n_hubs and
       // n_kept — lazily each consumer re-ran the whole degree stage
       // (explode + count agg + join) from the sig checkpoint.
-      val hubs = deg.filter(col("degree") >= 150).select("doc_id")
+      val hubs = deg.filter(col("degree") >= Hashing.HubDegree).select("doc_id")
         .localCheckpoint()
       val keptSig = sig.join(hubs, Seq("doc_id"), "left_anti")
       // Stage 3: banded pair join + confirm among survivors only.
       val bands = keptSig.select(col("doc_id"),
-        posexplode(array(bandCols.map(bc => array(bc.map(col): _*)): _*))
+        posexplode(array(Hashing.bandCols.map(bc => array(bc.map(col): _*)): _*))
           .as(Seq("band_idx", "band_key")))
       val cand = bands.as("x").join(bands.as("y"),
           col("x.band_idx") === col("y.band_idx") &&

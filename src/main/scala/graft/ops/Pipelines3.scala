@@ -20,11 +20,6 @@ import org.apache.spark.sql.functions._
   */
 object Pipelines3 extends Module {
 
-  /** Cross-engine-stable 32-bit hash (md5 hex prefix; same recipe as
-    * LlmScale.hvExpr / Pipelines2.hv32). */
-  private def hv32(sqlExpr: String): String =
-    s"cast(conv(substring(md5(cast($sqlExpr as binary)),1,8),16,10) as bigint)"
-
   /** 8-gram strings (with duplicates) of the whitespace tokenization —
     * the contamination-screening unit. Row-local; guarded for short
     * docs. Dedup happens AFTER hashing (cheap long equality), not here
@@ -190,7 +185,7 @@ object Pipelines3 extends Module {
     // at 100 TB that's the whole corpus minus ~one bucket.
     "llm_token_budget_sample" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-        .withColumn("hv", expr(hv32("cast(doc_id as string)")))
+        .withColumn("hv", expr(Hashing.md5Prefix("cast(doc_id as string)")))
         .withColumn("n_tokens", size(split(col("text"), " ")).cast("long"))
         .withColumn("bucket", expr("hv div 16777216"))
       val wb = org.apache.spark.sql.expressions.Window.orderBy("bucket")

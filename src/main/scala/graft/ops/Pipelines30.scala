@@ -178,8 +178,6 @@ object Pipelines30 extends Module {
   private def ivfBatchTopk(s: SparkSession, d: String,
       probePred: org.apache.spark.sql.Column =
         col("vec_id") % 50 === 0): DataFrame = {
-    def cosine(a: String, b: String) =
-      expr(s"graft_cosine_sim($a, $b)")
     val e = Tables.embeddings(s, d).select("vec_id", "embedding")
     val sv = Tables.embeddings(s, d)
       .agg(count(lit(1)).as("n_vecs"))
@@ -189,7 +187,7 @@ object Pipelines30 extends Module {
       .select(col("vec_id").as("cent_id"), col("embedding").as("ce"))
     val scores = e.join(broadcast(cents))
       .select(col("vec_id"), col("cent_id"),
-              (round(cosine("embedding", "ce"), 4) + 0.0).as("cs"))
+              (round(expr("graft_cosine_sim(embedding, ce)"), 4) + 0.0).as("cs"))
     // Packed-BIGINT argmax (round 14): max(struct) planned as
     // SortAggregate and its N·k-row sort killed the 2 M-vec build on
     // local disk — see Pipelines4.cellArgmax.
@@ -216,7 +214,7 @@ object Pipelines30 extends Module {
     val cand = cells.join(probeCells, Seq("cell", "salt"))
       .filter(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-              (round(cosine("pe", "embedding"), 4) + 0.0).as("cos_sim"))
+              (round(expr("graft_cosine_sim(pe, embedding)"), 4) + 0.0).as("cos_sim"))
     // Top-3 via TopKPerGroup, NOT a row_number window (round 14 —
     // the same re-plan the kNN edge build got in r13, for the same
     // reason): the window form exchanges and externally sorts the

@@ -178,7 +178,6 @@ object Pipelines31 extends Module {
   private[graft] def probeTopk(s: SparkSession, probes: DataFrame,
       sidecar: DataFrame,
       refine: Array[Long] => DataFrame): DataFrame = {
-    def cosine(a: String, b: String) = expr(s"graft_cosine_sim($a, $b)")
     val npTab = sidecar.agg(
       greatest(lit(2L), expr("count(1) div 16")).as("np"))
     val wAsg = Window.partitionBy("probe_id")
@@ -187,7 +186,7 @@ object Pipelines31 extends Module {
       .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
       .crossJoin(broadcast(sidecar))
       .select(col("probe_id"), col("pe"), col("cent_id"),
-              (round(cosine("pe", "ce"), 4) + 0.0).as("cs"))
+              (round(expr("graft_cosine_sim(pe, ce)"), 4) + 0.0).as("cs"))
       .withColumn("rn", row_number().over(wAsg))
       .crossJoin(broadcast(npTab))
       .filter(col("rn") <= col("np"))
@@ -201,7 +200,7 @@ object Pipelines31 extends Module {
       .join(broadcast(probeCells), Seq("cell"))
       .filter(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-              (round(cosine("pe", "embedding"), 4) + 0.0).as("cos_sim"))
+              (round(expr("graft_cosine_sim(pe, embedding)"), 4) + 0.0).as("cos_sim"))
       .withColumn("rnk", row_number().over(w).cast("long"))
       .filter(col("rnk") <= 3)
       .orderBy("probe_id", "rnk")

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -12,10 +12,6 @@ import org.apache.spark.sql.functions._
   * integer-exact arithmetic wherever a threshold or weight is compared.
   */
 object Pipelines4 extends Module {
-
-  private def cosine(s: SparkSession, a: String, b: String): Column = {
-    expr(s"graft_cosine_sim($a, $b)")
-  }
 
   /** Corpus→cell argmax over the (vec_id, cent_id, cs) score relation
     * — shared by every IVF site (this key, the batch/persisted keys,
@@ -104,7 +100,7 @@ object Pipelines4 extends Module {
       // round 14 fixed the SORT max(struct) still paid.)
       val scores = e.join(broadcast(cents))
         .select(col("vec_id"), col("cent_id"),
-                (round(cosine(s, "embedding", "ce"), 4) + 0.0).as("cs"))
+                (round(expr("graft_cosine_sim(embedding, ce)"), 4) + 0.0).as("cs"))
       val cellsId = cellArgmax(scores)
       // Reattach the embedding with one uniform-key equi-join (at
       // cluster scale both sides shard on vec_id; no broadcast of an
@@ -132,7 +128,7 @@ object Pipelines4 extends Module {
       val cand = probeCells.join(cells, Seq("cell"))
         .filter(col("vec_id") =!= col("probe_id"))
         .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-                (round(cosine(s, "pe", "embedding"), 4) + 0.0).as("cos_sim"))
+                (round(expr("graft_cosine_sim(pe, embedding)"), 4) + 0.0).as("cos_sim"))
       val w = Window.partitionBy("probe_id")
         .orderBy(desc("cos_sim"), asc("neighbor_id"))
       cand.withColumn("rnk", row_number().over(w).cast("long"))
@@ -169,8 +165,6 @@ object Pipelines4 extends Module {
         least(lit(15), greatest(lit(8),
             length(expr("bin((count(1) - 1) div 20)"))))
           .cast("int").as("w"))
-      val hvExpr =
-        "cast(conv(substring(md5(cast(tok as binary)),1,15),16,10) as bigint)"
       // Round 18 (opt, guide §2.2/§4): the bit-balance stage used to
       // explode every token row into 4·w (32–60) bit-rows before the
       // first hash agg — E·4w generated rows through a (doc, bit)
@@ -190,7 +184,7 @@ object Pipelines4 extends Module {
         .select(col("doc_id"),
                 explode(array_distinct(split(col("text"), " "))).as("tok"))
         .crossJoin(broadcast(wTab))
-        .withColumn("hv", expr(hvExpr))
+        .withColumn("hv", expr(Hashing.md5Prefix("tok", 15)))
         .groupBy("doc_id", "w")
         .agg(balCols.head, balCols.tail: _*)
         .withColumn("sarr", array((0 until 60).map(j => col(s"s$j")): _*))
@@ -214,9 +208,7 @@ object Pipelines4 extends Module {
           col("x.band_idx") === col("y.band_idx") &&
           col("x.band_key") === col("y.band_key") &&
           col("x.doc_id") < col("y.doc_id") &&
-          (col("x.band_idx") < 1 || col("x.b0") =!= col("y.b0")) &&
-          (col("x.band_idx") < 2 || col("x.b1") =!= col("y.b1")) &&
-          (col("x.band_idx") < 3 || col("x.b2") =!= col("y.b2")) &&
+          Hashing.firstCollision(4, "b") &&
           expr("bit_count(x.simhash ^ y.simhash) <= 3"))
         .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"),
                 expr("cast(bit_count(x.simhash ^ y.simhash) as bigint)")

@@ -14,12 +14,6 @@ import org.apache.spark.sql.functions._
   */
 object Pipelines6 extends Module {
 
-  /** 32-bit md5-prefix hash of a string column as a positive long —
-    * identical in both engines (see Pipelines5.md5h32).
-    */
-  private def md5h32(colName: String): String =
-    s"cast(conv(substring(md5(cast($colName as binary)),1,8),16,10) as bigint)"
-
   def queries: Map[String, Q] = Map(
     // Winnowed fingerprints (the MOSS scheme, Schleimer et al. 2003):
     // hash every 4-token gram, slide a w=4 window over the gram-hash
@@ -37,7 +31,7 @@ object Pipelines6 extends Module {
                 posexplode(expr("transform(sequence(1, size(toks) - 3), " +
                                 "i -> concat_ws(' ', slice(toks, i, 4)))")))
         .select(col("doc_id"), col("ng"), col("pos"),
-                expr(md5h32("col")).as("h"))
+                expr(Hashing.md5Prefix("col")).as("h"))
         .withColumn("mh", min("h").over(
           Window.partitionBy("doc_id").orderBy("pos").rowsBetween(0, 3)))
         .filter(col("pos") <= col("ng") - 4) // full windows only
@@ -70,9 +64,8 @@ object Pipelines6 extends Module {
         .localCheckpoint()
       val rows4 = s.range(1)
         .select(explode(expr("sequence(0, 3)")).as("r"))
-      val bExpr = "cast(conv(substring(md5(cast(" +
-        "concat(cast(r as string), ':', cast(k as string)) as binary))" +
-        ",1,8),16,10) as bigint) % 256"
+      val bExpr = Hashing.md5Prefix(
+        "concat(cast(r as string), ':', cast(k as string))") + " % 256"
       val keyed = exact.crossJoin(broadcast(rows4))
         .withColumn("b", expr(bExpr))
         .localCheckpoint() // |K|×4 rows feed both counters and probes

@@ -27,9 +27,8 @@ object Pipelines7 extends Module {
     "join_bloom_screen" -> ((s, d) => {
       val rows4 = s.range(1).select(explode(expr("sequence(0, 3)")).as("r"))
       def bitOf(keyCol: String): org.apache.spark.sql.Column =
-        expr(s"cast(conv(substring(md5(cast(concat(cast(r as string), ':', " +
-             s"cast($keyCol as string)) as binary)),1,8),16,10) as bigint) " +
-             "% 65536")
+        expr(Hashing.md5Prefix(
+          s"concat(cast(r as string), ':', cast($keyCol as string))") + " % 65536")
       // Round 18 (opt, guide §2.4): the fact table was scanned THREE
       // times (distinct probe keys + the candidate count + the exact
       // count) and the segment filter twice (bloom build + exact

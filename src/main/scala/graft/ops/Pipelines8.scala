@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Round-5 fifth batch — SURVEY.md §2.11j: the MinHash estimator
@@ -24,23 +23,9 @@ object Pipelines8 extends Module {
     // agg_countmin_freq / join_bloom_screen: every sketch ships with
     // its measured error.
     "llm_minhash_jaccard_audit" -> ((s, d) => {
-      val P = 2147483647L
-      val A = Seq(100003L, 122251L, 135637L, 161423L, 173431L, 188677L,
-                  199831L, 224737L, 350377L, 411637L, 467237L, 524287L,
-                  600011L, 700001L, 800011L, 900001L)
-      val B = Seq(7L, 977L, 1847L, 2741L, 3581L, 4421L, 5281L, 6143L,
-                  7001L, 7919L, 8887L, 9733L, 10657L, 11677L, 12569L,
-                  13457L)
-      val hvExpr =
-        "cast(conv(substring(md5(cast(tok as binary)),1,8),16,10) as bigint)"
-      val toks = Tables.documents(s, d)
+      val sig = Hashing.signature(Tables.documents(s, d)
         .select(col("doc_id"),
-                explode(array_distinct(split(col("text"), " "))).as("tok"))
-        .withColumn("hv", expr(hvExpr))
-      val sig = toks.groupBy("doc_id")
-        .agg(min((col("hv") * A(0) + B(0)) % P).as("m0"),
-             (1 until 16).map(i =>
-               min((col("hv") * A(i) + B(i)) % P).as(s"m$i")): _*)
+                explode(array_distinct(split(col("text"), " "))).as("tok")))
         .localCheckpoint() // both band sides + both est sides reuse it
       // Band keys are the RAW 4-slot signature slices (array<bigint>,
       // 32 bytes) — semantically identical to the oracle's raw-value
@@ -49,22 +34,13 @@ object Pipelines8 extends Module {
       // for shuffle width and documents the accepted ~n²·4/2⁶⁴
       // collision bound; the AUDIT keys stay exact by construction so
       // the measured estimator error is attributable to MinHash alone.
-      val bandCols = Seq("m0,m1,m2,m3", "m4,m5,m6,m7", "m8,m9,m10,m11",
-                         "m12,m13,m14,m15")
-      def banded(df: DataFrame): DataFrame = df.selectExpr(
-        Seq("doc_id") ++ (0 until 4).map(i => s"array(${bandCols(i)}) as k$i") :+
-          "stack(4, 0, array(m0,m1,m2,m3), 1, array(m4,m5,m6,m7), " +
-          "2, array(m8,m9,m10,m11), 3, array(m12,m13,m14,m15)) " +
-          "as (band_idx, band_key)": _*)
-      val probes = banded(sig.filter(pmod(col("doc_id"), lit(20)) === 0))
-      val all = banded(sig)
+      val probes = Hashing.rawBands(sig.filter(pmod(col("doc_id"), lit(20)) === 0))
+      val all = Hashing.rawBands(sig)
       val cand = probes.as("x").join(all.as("y"),
           col("x.band_idx") === col("y.band_idx") &&
           col("x.band_key") === col("y.band_key") &&
           col("x.doc_id") < col("y.doc_id") &&
-          (col("x.band_idx") < 1 || col("x.k0") =!= col("y.k0")) &&
-          (col("x.band_idx") < 2 || col("x.k1") =!= col("y.k1")) &&
-          (col("x.band_idx") < 3 || col("x.k2") =!= col("y.k2")))
+          Hashing.firstCollision(4))
         .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"))
       val est = cand
         .join(sig.as("sa"), col("a_id") === col("sa.doc_id"))
@@ -75,8 +51,7 @@ object Pipelines8 extends Module {
             .reduce(_ + _) / 16.0, 4) + 0.0).as("est_jaccard"))
       val tsets = Tables.documents(s, d)
         .select(col("doc_id"),
-          array_sort(array_distinct(
-            transform(split(col("text"), " "), t => xxhash64(t)))).as("th"))
+          Hashing.tokenHashSet(split(col("text"), " ")).as("th"))
         .withColumn("n", size(col("th")))
         .localCheckpoint()
       est

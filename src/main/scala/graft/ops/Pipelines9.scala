@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -135,54 +134,29 @@ object Pipelines9 extends Module {
     // fixture's typical J ≥ 0.88 — the audit REPORTS the realized
     // blend rather than assuming it.
     "llm_dedup_lsh_recall" -> ((s, d) => {
-      val P = 2147483647L
-      val A = Seq(100003L, 122251L, 135637L, 161423L, 173431L, 188677L,
-                  199831L, 224737L, 350377L, 411637L, 467237L, 524287L,
-                  600011L, 700001L, 800011L, 900001L)
-      val B = Seq(7L, 977L, 1847L, 2741L, 3581L, 4421L, 5281L, 6143L,
-                  7001L, 7919L, 8887L, 9733L, 10657L, 11677L, 12569L,
-                  13457L)
-      val hvExpr =
-        "cast(conv(substring(md5(cast(tok as binary)),1,8),16,10) as bigint)"
-      // Signature + band construction mirrors llm_dedup_minhash_lsh /
-      // llm_minhash_jaccard_audit (same hash chain — the audit must
-      // measure the PRODUCTION banding, not a lookalike).
-      val sig = Tables.documents(s, d)
+      // Signature and banding are the Hashing kit's: the audit
+      // measures the PRODUCTION chain, not a lookalike.
+      val sig = Hashing.signature(Tables.documents(s, d)
         .select(col("doc_id"),
-                explode(array_distinct(split(col("text"), " "))).as("tok"))
-        .withColumn("hv", expr(hvExpr))
-        .groupBy("doc_id")
-        .agg(min((col("hv") * A(0) + B(0)) % P).as("m0"),
-             (1 until 16).map(i =>
-               min((col("hv") * A(i) + B(i)) % P).as(s"m$i")): _*)
+                explode(array_distinct(split(col("text"), " "))).as("tok")))
         .localCheckpoint()
       // Raw-slice band keys (array<bigint>) so the recall measurement
       // is exactly the banding semantics the oracle states — the
       // production 8-byte xxhash64 key is a width optimization with a
       // documented collision bound (see llm_dedup_minhash_lsh), not
       // part of the semantics being audited.
-      def banded(df: DataFrame): DataFrame = df.selectExpr(
-        Seq("doc_id") ++ (0 until 4).map(i => s"array(" + Seq(
-          "m0,m1,m2,m3", "m4,m5,m6,m7", "m8,m9,m10,m11",
-          "m12,m13,m14,m15")(i) + s") as k$i") :+
-          "stack(4, 0, array(m0,m1,m2,m3), 1, array(m4,m5,m6,m7), " +
-          "2, array(m8,m9,m10,m11), 3, array(m12,m13,m14,m15)) " +
-          "as (band_idx, band_key)": _*)
-      val probeBands = banded(sig.filter(pmod(col("doc_id"), lit(20)) === 0))
-      val allBands = banded(sig)
+      val probeBands = Hashing.rawBands(sig.filter(pmod(col("doc_id"), lit(20)) === 0))
+      val allBands = Hashing.rawBands(sig)
       val cand = probeBands.as("x").join(allBands.as("y"),
           col("x.band_idx") === col("y.band_idx") &&
           col("x.band_key") === col("y.band_key") &&
           col("x.doc_id") < col("y.doc_id") &&
-          (col("x.band_idx") < 1 || col("x.k0") =!= col("y.k0")) &&
-          (col("x.band_idx") < 2 || col("x.k1") =!= col("y.k1")) &&
-          (col("x.band_idx") < 3 || col("x.k2") =!= col("y.k2")))
+          Hashing.firstCollision(4))
         .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"),
                 lit(1).as("hit"))
       val tsets = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"),
-          array_sort(array_distinct(
-            transform(split(col("text"), " "), t => xxhash64(t)))).as("th"))
+          Hashing.tokenHashSet(split(col("text"), " ")).as("th"))
         .withColumn("n", size(col("th")))
         .localCheckpoint()
       // Ground truth via a LOSSLESS length-banded equi-join (round-6

@@ -1,15 +1,50 @@
 package graft
 
+import java.io.File
+import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
+import org.scalatest.{Outcome, TestSuite, TestSuiteMixin}
 import org.scalatest.funsuite.AnyFunSuite
 
 object TestSpark {
   lazy val spark: SparkSession = {
     val s = Graft.session()
     s.sparkContext.setLogLevel("WARN")
+    removeAtExit(new File(ops.Sinks.sinkRoot(s)))
     s
   }
   val sf = "/root/testdata/sf0.001"
+
+  /** Dirs still to delete when the JVM exits. */
+  private val atExit = java.util.concurrent.ConcurrentHashMap.newKeySet[File]()
+  sys.addShutdownHook(atExit.forEach(f => ops.Pipelines31.rmRf(f)))
+  private def removeAtExit(f: File): Unit = atExit.add(f)
+
+  /** Per-test temp dirs: `tempDir` makes one under `java.io.tmpdir`,
+    * and it is deleted recursively when its test ends. Each test
+    * stops its streaming queries in its own `finally`, so they have
+    * stopped by then. A dir that does not delete is left to the
+    * shutdown hook. */
+  trait TempDirs extends TestSuiteMixin { this: TestSuite =>
+    private val dirs = collection.mutable.Buffer[File]()
+
+    def tempDir(prefix: String): String = {
+      val f = Files.createTempDirectory(prefix).toFile
+      dirs += f
+      removeAtExit(f)
+      f.getAbsolutePath
+    }
+
+    abstract override def withFixture(test: NoArgTest): Outcome =
+      try super.withFixture(test)
+      finally {
+        dirs.foreach { f =>
+          ops.Pipelines31.rmRf(f)
+          if (!f.exists()) atExit.remove(f)
+        }
+        dirs.clear()
+      }
+  }
 }
 
 /** Two modules that both declare key `k`. */

@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * exercised on a synthetic corpus large enough to take the k > 64
   * two-level path.
   */
-class Round12bSpec extends AnyFunSuite {
+class Round12bSpec extends AnyFunSuite with TestSpark.TempDirs {
   import TestSpark._
 
   private def q(name: String) = SparkEntry.queries(name)(spark, sf)
@@ -89,7 +89,7 @@ class Round12bSpec extends AnyFunSuite {
     // Routing is a deterministic function of the vector, so both
     // members of every duplicate pair land in the same cell and the
     // pair must surface with cos = 1.0 exactly.
-    val dir = java.nio.file.Files.createTempDirectory("sem_dup").toString
+    val dir = tempDir("sem_dup")
     spark.range(5000)
       .select(col("id").as("vec_id"),
               expr("""transform(sequence(0, 63),

@@ -17,7 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * true neighbor differing in ≤ r sign bits is always a candidate —
   * the recall guarantee the dial exists to hold).
   */
-class Round13Spec extends AnyFunSuite {
+class Round13Spec extends AnyFunSuite with TestSpark.TempDirs {
   import TestSpark._
 
   private def probeSet(np: Int, bucket: Long): Seq[Long] = {
@@ -121,7 +121,7 @@ class Round13Spec extends AnyFunSuite {
     // with an UNSALTED join and a plain row_number window — so the
     // differential exercises exactly the two mechanisms the shipped
     // plan adds (salt replication, heap-based top-k).
-    val dir = java.nio.file.Files.createTempDirectory("knnhot").toString
+    val dir = tempDir("knnhot")
     // Coordinate 0 carries ~100× the mass of the other 63, so every
     // ±1 hyperplane's sign is s_{p,0} for every vector — the cluster
     // provably shares ONE cell at EVERY depth (a ±8-magnitude noise
@@ -188,7 +188,7 @@ class Round13Spec extends AnyFunSuite {
     // Active side: the d>0 test's near-parallel corpus — one
     // irreducible subcell of 2600 > CAP — must quarantine EVERY
     // vector and emit no edges.
-    val dir = java.nio.file.Files.createTempDirectory("knnhub").toString
+    val dir = tempDir("knnhub")
     spark.range(2600)
       .selectExpr("id as vec_id",
         """transform(sequence(0, 63),

@@ -18,7 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *    no emitted pair touches a quarantined id (the quarantine is
   *    removal from BOTH join sides, not output suppression).
   */
-class Round15Spec extends AnyFunSuite {
+class Round15Spec extends AnyFunSuite with TestSpark.TempDirs {
   import TestSpark._
 
   test("embedding-dedup hub gate is a no-op at fixture scale") {
@@ -41,8 +41,7 @@ class Round15Spec extends AnyFunSuite {
     // bits) plus 24 scattered hash-derived vectors. The planted block
     // must come out quarantined: each member exactly one kind='hub'
     // row, and no kind='pair' row touching any hub id.
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_r15_gate").toString
+    val dir = tempDir("graft_r15_gate")
     val hot = spark.range(0, 2100).select(
       col("id").as("vec_id"),
       expr("""transform(sequence(1, 64),

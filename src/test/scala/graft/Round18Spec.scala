@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * answers, the compaction manifest serves any reader, and the margin
   * budget clamps instead of wrapping negative at np ≥ 39.
   */
-class Round18Spec extends AnyFunSuite {
+class Round18Spec extends AnyFunSuite with TestSpark.TempDirs {
   import TestSpark._
 
   test("margin budget clamps at np >= 39 instead of wrapping negative") {
@@ -50,8 +50,7 @@ class Round18Spec extends AnyFunSuite {
     //      in-Spark derivation of the NEW oracle semantics
     //      (base-derived stride + centroid set + nprobe, full-corpus
     //      candidates) — value for value.
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_r18_switchover").toString
+    val dir = tempDir("graft_r18_switchover")
     val nFull = 51L * 4096L // 208 896: full stride 51, base stride 50
     spark.range(0, nFull).select(
         col("id").as("vec_id"),
@@ -126,10 +125,10 @@ class Round18Spec extends AnyFunSuite {
         "engine diverged from the base-centroid oracle derivation " +
           "above the stride switchover")
     } finally {
-      // Drop the synthetic corpus, its shared artifact, and this
-      // app's twin so repeated suite runs stay disk-flat.
+      // Drop the synthetic corpus' shared artifact and this app's
+      // twin so repeated suite runs stay disk-flat (the corpus dir
+      // itself is a TempDirs dir).
       artifact.foreach(r => ops.Pipelines31.rmRf(new java.io.File(r)))
-      ops.Pipelines31.rmRf(new java.io.File(dir))
       val twin = ops.Sinks.ident(spark, "graft_ivf_index", dir)
       try spark.sql(s"DROP TABLE IF EXISTS default.`$twin`")
       catch { case _: Exception => () }
@@ -329,8 +328,8 @@ class Round18Spec extends AnyFunSuite {
   }
 
   test("degree agg+join-back equals the retired count-over-window form") {
-    // Round-18 re-plan of the pairless LSH degree pass (shared shape:
-    // llm_lsh_degree_hist / llm_dedup_hub_quarantine / minhashLsh):
+    // Round-18 re-plan of the pairless LSH degree pass
+    // (ops.Hashing.degree):
     // the per-(sid, key) subset counts ride a count aggregate +
     // shuffled-hash join-back instead of a count-over-window. The
     // declared histogram must match the retired window form row for

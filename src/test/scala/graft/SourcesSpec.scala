@@ -8,15 +8,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * with explicit schemas (the reference capability class ingests CSV
   * exports; the engine reads all three through the same DataFrame
   * surface, so every operator works unchanged on any of them). */
-class SourcesSpec extends AnyFunSuite {
+class SourcesSpec extends AnyFunSuite with TestSpark.TempDirs {
   import TestSpark._
-
-  private def tmp(prefix: String) =
-    Files.createTempDirectory(prefix).toFile.getAbsolutePath
 
   test("CSV round-trip preserves the nation table exactly") {
     val nation = Tables.nation(spark, sf)
-    val dir = tmp("csv-src")
+    val dir = tempDir("csv-src")
     nation.write.option("header", "true").mode("overwrite").csv(dir)
     val back = spark.read
       .schema(nation.schema)
@@ -28,7 +25,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("JSON round-trip preserves values and re-runs a declared query") {
     val cust = Tables.customer(spark, sf)
-    val dir = tmp("json-src")
+    val dir = tempDir("json-src")
     cust.write.mode("overwrite").json(dir)
     val back = spark.read.schema(cust.schema).json(dir)
     assert(back.count() == cust.count())
@@ -43,7 +40,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("schema-on-read rejects malformed rows rather than corrupting") {
-    val dir = tmp("badcsv")
+    val dir = tempDir("badcsv")
     Files.writeString(java.nio.file.Paths.get(s"$dir/bad.csv"),
       "n_nationkey,n_name,n_regionkey\n1,OK,2\nnot_an_int,BAD,9\n")
     val schema = Tables.nation(spark, sf).schema

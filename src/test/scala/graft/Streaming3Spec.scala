@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,11 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * watermarks on both sides, and the foreachBatch sink path — the two
   * Structured Streaming surfaces not yet exercised by StreamingSpec.
   */
-class Streaming3Spec extends AnyFunSuite {
+class Streaming3Spec extends AnyFunSuite with TestSpark.TempDirs {
   import TestSpark._
-
-  private def tmpDir(prefix: String) =
-    Files.createTempDirectory(prefix).toFile.getAbsolutePath
 
   test("stream-stream interval join equals the batch range join") {
     // 'view' events joined to the same user's 'click' events within
@@ -21,7 +17,7 @@ class Streaming3Spec extends AnyFunSuite {
     // late state is evicted. Batch truth: identical join on the
     // static table.
     val events = Tables.events(spark, sf)
-    val src = tmpDir("ssj-src")
+    val src = tempDir("ssj-src")
     events.write.mode("overwrite").parquet(src)
 
     def stream = spark.readStream.schema(events.schema).parquet(src)
@@ -63,12 +59,12 @@ class Streaming3Spec extends AnyFunSuite {
 
   test("foreachBatch sink preserves every row across micro-batches") {
     val events = Tables.events(spark, sf)
-    val src = tmpDir("feb-src")
+    val src = tempDir("feb-src")
     // Two source files → at least one micro-batch each under
     // maxFilesPerTrigger=1, proving cross-batch accumulation.
     events.filter(col("event_id") % 2 === 0).write.parquet(src + "/a")
     events.filter(col("event_id") % 2 === 1).write.parquet(src + "/b")
-    val out = tmpDir("feb-out")
+    val out = tempDir("feb-out")
 
     val counts = scala.collection.mutable.ArrayBuffer[Long]()
     val q = spark.readStream.schema(events.schema)

@@ -9,15 +9,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * expressions run under Structured Streaming, and watermarking drops
   * late data. Uses the public file-source streaming API only.
   */
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with TestSpark.TempDirs {
   import TestSpark._
-
-  private def tmpDir(prefix: String) =
-    Files.createTempDirectory(prefix).toFile.getAbsolutePath
 
   test("tumbling window agg: streaming output equals batch output") {
     val events = Tables.events(spark, sf)
-    val src = tmpDir("stream-src")
+    val src = tempDir("stream-src")
     events.write.mode("overwrite").parquet(src)
 
     val stream = spark.readStream.schema(events.schema).parquet(src)
@@ -42,7 +39,7 @@ class StreamingSpec extends AnyFunSuite {
     // finisher (row_number over a streaming aggregate is unsupported
     // by design), so the streaming contract is the aggregation stage.
     val events = Tables.events(spark, sf)
-    val src = tmpDir("topk-src")
+    val src = tempDir("topk-src")
     events.write.mode("overwrite").parquet(src)
 
     val stream = spark.readStream.schema(events.schema).parquet(src)
@@ -66,7 +63,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("dropDuplicates dedup state spans micro-batches") {
-    val src = tmpDir("dedup-src")
+    val src = tempDir("dedup-src")
     import spark.implicits._
     val part1 = Seq((1L, "click"), (2L, "view"), (3L, "click"))
       .toDF("event_id", "event_type")
@@ -90,7 +87,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("watermark drops events later than the allowed lateness") {
-    val src = tmpDir("late-src")
+    val src = tempDir("late-src")
     import spark.implicits._
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     // Batch 1 advances the watermark to 11:30 - 1h = 10:30.
@@ -130,7 +127,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("EventStream reads the raw ns-timestamp fixture under readStream") {
     // The file stream source needs a directory, not a bare file.
-    val dir = tmpDir("events-raw")
+    val dir = tempDir("events-raw")
     Files.copy(java.nio.file.Paths.get(s"$sf/events.parquet"),
                java.nio.file.Paths.get(s"$dir/events.parquet"))
     val stream = sources.EventStream.open(spark, dir)
@@ -150,7 +147,7 @@ class StreamingSpec extends AnyFunSuite {
   test("flatMapGroupsWithState keeps custom per-key state across batches") {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val src = tmpDir("state-src")
+    val src = tempDir("state-src")
     Seq((1L, 10.0), (2L, 5.0), (1L, 2.5)).toDF("user_id", "value")
       .coalesce(1).write.parquet(s"$src/f1")
 

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -16,7 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * per-session check is finer-grained than the declared key's
   * per-user summary output.
   */
-class TransformWithStateSpec extends AnyFunSuite {
+class TransformWithStateSpec extends AnyFunSuite with TestSpark.TempDirs {
   import TestSpark._
 
   test("transformWithState sessionization equals batch events_sessionize") {
@@ -32,7 +31,7 @@ class TransformWithStateSpec extends AnyFunSuite {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     import s2.implicits._
 
-    val root = Files.createTempDirectory("tws").toFile.getAbsolutePath
+    val root = tempDir("tws")
     val ev = Tables.events(s2, sf)
       .select(col("user_id"),
               unix_timestamp(date_trunc("second", col("ts"))).as("ts_s"),
